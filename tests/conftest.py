@@ -77,7 +77,7 @@ def pytest_collection_modifyitems(config, items):
     items.sort(
         key=lambda it: rank.get(os.path.basename(str(it.fspath)), len(rank))
     )
-    if os.environ.get("YUKI_SPARK_RUN_SLOW"):
+    if os.environ.get("YUKI_SPARK_RUN_SLOW") == "1":
         return
     skip = pytest.mark.skip(
         reason="slow tier: set YUKI_SPARK_RUN_SLOW=1 to run"

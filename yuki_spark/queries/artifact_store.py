@@ -12,10 +12,10 @@ Two families consume this machinery:
 
 Contract: an artifact's address is a sha over (key, family version,
 dep ids) where the dep ids start from a TABLE FINGERPRINT (part-file
-relpaths + byte sizes + mtimes + any parameters). A regenerated input
-or changed parameter produces a new address and a fresh compute —
-never a stale reuse; a changed builder requires a family-version bump
-(the store's O5 contract). An unwritable store root degrades to an
+relpaths + byte sizes + mtimes + footer probes + any parameters). A
+regenerated input or changed parameter produces a new address and a
+fresh compute — never a stale reuse; a changed builder requires a
+family-version bump (the store's O5 contract). An unwritable store root degrades to an
 unpersisted lazy-checkpointed build: correctness is never hostage to
 a disk.
 """
@@ -34,7 +34,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import table_path
+from ..catalog import part_identity, table_path
 from ..pipeline.impressions import ImpressionStore, impression_id
 
 # PER-ADDRESS build locks (r15: the former single global RLock
@@ -106,50 +106,18 @@ def code_fingerprint(*modules) -> str:
     return h.hexdigest()[:16]
 
 
-_PROBE_BYTES = 4096
-
-
-def _tail_probe(full: str, size: int) -> str:
-    """Hash of a file's last ``_PROBE_BYTES`` — for a parquet part this
-    spans the footer (row counts, column stats, page offsets), so
-    regenerated content is caught even when size and mtime collide
-    (coarse 1 s mtime filesystems). One seek+read, no data scan."""
-    with open(full, "rb") as f:
-        if size > _PROBE_BYTES:
-            f.seek(-_PROBE_BYTES, os.SEEK_END)
-        return hashlib.sha256(f.read(_PROBE_BYTES)).hexdigest()[:16]
-
-
 def table_fingerprint(sf_dir: str, table: str, extra: Any = None) -> str:
-    """Identity of one catalog table (plus caller parameters): part-
-    file relpaths, byte sizes, mtimes (ns) AND a footer-tail content
-    probe — cheap (no data scan) and strict enough that regenerated
-    bytes at the same path get a new address even on filesystems whose
-    mtime granularity is too coarse to tell rewrites apart. ``extra``
-    folds in whatever parameters shape the artifact (caps, k, probe
+    """Identity of one catalog table (plus caller parameters): the
+    table's :func:`~yuki_spark.catalog.part_identity` — part-file
+    relpaths, byte sizes, mtimes (ns) AND a footer-tail content probe
+    — cheap (no data scan) and strict enough that regenerated bytes at
+    the same path get a new address even on filesystems whose mtime
+    granularity is too coarse to tell rewrites apart. ``extra`` folds
+    in whatever parameters shape the artifact (caps, k, probe
     counts)."""
     path = table_path(sf_dir, table)
-    ents: list[tuple[str, int, int, str] | tuple[str, str]] = []
-
-    def _ent(full: str, rel: str) -> tuple[str, int, int, str] | tuple[str, str]:
-        # stat→open is two syscalls: a part file vanishing in between
-        # (concurrent compaction on a live table) must change the
-        # fingerprint, not crash every deposit lookup.
-        try:
-            st = os.stat(full)
-            return (rel, st.st_size, st.st_mtime_ns, _tail_probe(full, st.st_size))
-        except OSError:
-            return ("gone", rel)
-
-    if os.path.isdir(path):
-        for dirpath, _dirs, files in sorted(os.walk(path)):
-            for fn in sorted(files):
-                full = os.path.join(dirpath, fn)
-                ents.append(_ent(full, os.path.relpath(full, path)))
-    else:
-        ents.append(_ent(path, os.path.basename(path)))
     payload = json.dumps(
-        {"root": os.path.realpath(path), "files": ents, "extra": extra},
+        {"root": os.path.realpath(path), "files": part_identity(path), "extra": extra},
         sort_keys=True,
     )
     return hashlib.sha256(payload.encode()).hexdigest()[:32]
