@@ -134,7 +134,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
 
-    # Controlled coldness: point both query-artifact family stores at a
+    # Controlled coldness: point every query-artifact family store at a
     # FRESH root so the one-time deposit-build cost is paid inside this
     # process — timed explicitly below as cold_build_s — instead of
     # depending on whatever /tmp state a previous run left behind. The
@@ -143,11 +143,12 @@ def main() -> None:
     import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
+    import __spark_entry__  # noqa: F401, PLC0415 — declares every store
+    from yuki_spark.queries.artifact_store import FAMILIES  # noqa: PLC0415
+
     cold_root = tempfile.mkdtemp(prefix="yuki_spark-bench-cold-")
-    os.environ["YUKI_SPARK_DEDUP_STORE"] = os.path.join(cold_root, "dedup")
-    os.environ["YUKI_SPARK_SIM_STORE"] = os.path.join(cold_root, "sim")
-    os.environ["YUKI_SPARK_LM_STORE"] = os.path.join(cold_root, "lm")
-    os.environ["YUKI_SPARK_PIPE_STORE"] = os.path.join(cold_root, "pipe")
+    for var in dict.fromkeys(f.env_var for f in FAMILIES):
+        os.environ[var] = os.path.join(cold_root, var.lower())
     try:
         _main_body(sf_dir, sf)
     finally:

@@ -132,10 +132,14 @@ def test_publish_is_atomic_and_leaves_no_temp(spark, fresh_store):
     import json as _json
     import os as _os
 
+    from yuki_spark.pipeline.impressions import ImpressionStore
+
     dedup_family.clusters08(spark, SF_SMOKE).collect()
     root = str(fresh_store)
     entries = sorted(_os.listdir(root))
     assert entries and not [e for e in entries if "-tmp" in e]
+    # every directory left is a listed deposit: no temp residue of any name
+    assert entries == ImpressionStore(root).list_ids()
     meta = _json.load(open(_os.path.join(root, entries[0], "meta.json")))
     assert meta["impression"] == entries[0]
 
@@ -285,19 +289,60 @@ def test_bpe_learned_trains_once_for_both_consumers(spark, monkeypatch, tmp_path
     assert len(d57) > 0 and len(d58) > 0
 
 
-def test_unwritable_store_degrades_to_unpersisted(spark, monkeypatch, tmp_path):
+def _dedup_clusters_case(spark):
+    return (
+        dedup_family.clusters08(spark, SF_SMOKE),
+        dedup.neardup_clusters(_docs(spark), 0.8),
+        ("doc_id",),
+    )
+
+
+def _sim_lsh_case(spark):
+    from yuki_spark.operators import similarity
+    from yuki_spark.queries import sim
+
+    emb = sim.load(spark, SF_SMOKE, "embeddings")
+    return (
+        sim.s3_lsh_ann(spark, SF_SMOKE),
+        similarity.lsh_ann(
+            emb, k=sim.K, n_queries=sim.ANN_NQ, n_est=sim._emb_rows(SF_SMOKE)
+        ),
+        ("qid", "rk"),
+    )
+
+
+def _lm_per_doc3_case(spark):
+    from yuki_spark.operators import text
+    from yuki_spark.queries import docs as docsq
+    from yuki_spark.queries import lm_family
+
+    return (
+        lm_family.scored_per_doc3(spark, SF_SMOKE),
+        docsq._d56_per_doc(text.with_tokens(load(spark, SF_SMOKE, "documents"))),
+        ("doc_id",),
+    )
+
+
+@pytest.mark.parametrize(
+    "env_var, case",
+    [
+        ("YUKI_SPARK_DEDUP_STORE", _dedup_clusters_case),
+        ("YUKI_SPARK_SIM_STORE", _sim_lsh_case),
+        ("YUKI_SPARK_LM_STORE", _lm_per_doc3_case),
+    ],
+    ids=["dedup", "sim", "lm"],
+)
+def test_unwritable_store_degrades_to_unpersisted(
+    spark, monkeypatch, tmp_path, env_var, case
+):
     """Correctness is never hostage to the store disk: with an
     unwritable store root the family queries still produce their
     (identical) results, just without deposit reuse."""
     blocked = tmp_path / "blocked"
     blocked.write_text("a file, not a directory")  # mkdir will fail
-    monkeypatch.setenv("YUKI_SPARK_DEDUP_STORE", str(blocked / "store"))
-    dedup_family.COMPUTES.clear()
-    got = dedup_family.clusters08(spark, SF_SMOKE)
-    docs = _docs(spark)
-    assert _sorted_rows(got, "doc_id") == _sorted_rows(
-        dedup.neardup_clusters(docs, 0.8), "doc_id"
-    )
+    monkeypatch.setenv(env_var, str(blocked / "store"))
+    got, want, order = case(spark)
+    assert _sorted_rows(got, *order) == _sorted_rows(want, *order)
 
 
 def test_default_store_root_private_and_uid_suffixed(tmp_path, monkeypatch):

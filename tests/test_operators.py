@@ -1509,24 +1509,26 @@ def test_long_bucket_ids_past_int32_ceiling(spark):
         assert r["cosine"] == exact
 
 
-@pytest.mark.slow  # r14 verdict item 1: stress/equality redundancy tier (full CI via citest)
+# exact-dup groups, near-dups, permuted/duplicated-token twins
+# (identical SETS, different texts), empty docs, and singletons
+_TWIN_ROWS = [
+    (1, "alpha beta gamma delta epsilon zeta"),
+    (2, "alpha beta gamma delta epsilon eta"),      # near-dup of 1
+    (3, "alpha beta gamma delta epsilon zeta"),     # exact dup of 1
+    (4, "zeta epsilon delta gamma beta alpha"),     # same SET as 1, permuted
+    (5, "alpha alpha beta gamma delta epsilon zeta"),  # same SET, dup token
+    (6, "completely unrelated words entirely here now"),
+    (7, ""),                                        # empty
+    (8, ""),                                        # empty twin: must NOT cluster
+    (9, "solo document with its very own vocabulary"),
+]
+
+
 def test_neardup_clusters_equals_uncollapsed_form(spark):
     """neardup_clusters (identical-set collapse) returns EXACTLY
-    dedup_clusters(jaccard_pairs(...)): same rows on a corpus with
-    exact-dup groups, near-dups, permuted/duplicated-token twins
-    (identical SETS, different texts), empty docs, and singletons."""
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta epsilon eta"),      # near-dup of 1
-        (3, "alpha beta gamma delta epsilon zeta"),     # exact dup of 1
-        (4, "zeta epsilon delta gamma beta alpha"),     # same SET as 1, permuted
-        (5, "alpha alpha beta gamma delta epsilon zeta"),  # same SET, dup token
-        (6, "completely unrelated words entirely here now"),
-        (7, ""),                                        # empty
-        (8, ""),                                        # empty twin: must NOT cluster
-        (9, "solo document with its very own vocabulary"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    dedup_clusters(jaccard_pairs(...)) on the twin corpus — the
+    default-tier equality pin of the rewritten jaccard_candidates."""
+    df = spark.createDataFrame(_TWIN_ROWS, "doc_id long, text string")
     want = sorted(
         tuple(r)
         for r in dedup.dedup_clusters(dedup.jaccard_pairs(df, 0.8)).collect()
@@ -1536,7 +1538,11 @@ def test_neardup_clusters_equals_uncollapsed_form(spark):
     assert (1, 1) in got and (3, 1) in got and (4, 1) in got and (5, 1) in got
     assert all(d not in (7, 8, 9, 6) for d, _ in got)
 
-    # and on the real sf0.001 corpus (hundreds of docs, organic dups)
+
+@pytest.mark.slow  # r14 verdict item 1: stress/equality redundancy tier (full CI via citest)
+def test_neardup_clusters_equals_uncollapsed_form_on_sf0001(spark):
+    """The same equality on the real sf0.001 corpus (hundreds of docs,
+    organic dups)."""
     real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     want_r = sorted(
         tuple(r)
@@ -1546,28 +1552,19 @@ def test_neardup_clusters_equals_uncollapsed_form(spark):
     assert got_r == want_r and len(got_r) > 0
 
 
-@pytest.mark.slow  # r14 verdict item 1: stress/equality redundancy tier (full CI via citest)
 def test_jaccard_pairs_collapsed_equals_uncollapsed(spark):
     """jaccard_pairs_collapsed returns EXACTLY jaccard_pairs' rows
-    (including jac values) on a corpus with permuted/duplicated-token
-    twins, exact dups, near-dups, empties, and singletons — at two
-    thresholds — and on the organic sf0.001 corpus."""
-    rows = [
-        (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta epsilon eta"),
-        (3, "alpha beta gamma delta epsilon zeta"),
-        (4, "zeta epsilon delta gamma beta alpha"),
-        (5, "alpha alpha beta gamma delta epsilon zeta"),
-        (6, "completely unrelated words entirely here now"),
-        (7, ""),
-        (8, ""),
-        (9, "solo document with its very own vocabulary"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    (including jac values) on the twin corpus at two thresholds."""
+    df = spark.createDataFrame(_TWIN_ROWS, "doc_id long, text string")
     for t in (0.8, 0.5):
         want = sorted(tuple(r) for r in dedup.jaccard_pairs(df, t).collect())
         got = sorted(tuple(r) for r in dedup.jaccard_pairs_collapsed(df, t).collect())
         assert got == want, f"threshold {t}"
+
+
+@pytest.mark.slow  # r14 verdict item 1: stress/equality redundancy tier (full CI via citest)
+def test_jaccard_pairs_collapsed_equals_uncollapsed_on_sf0001(spark):
+    """The same equality on the organic sf0.001 corpus."""
     real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     want_r = sorted(tuple(r) for r in dedup.jaccard_pairs(real, 0.8).collect())
     got_r = sorted(tuple(r) for r in dedup.jaccard_pairs_collapsed(real, 0.8).collect())

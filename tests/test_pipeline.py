@@ -969,6 +969,90 @@ def test_read_path_heal_never_deletes_live_tmp(spark, tmp_path):
     assert not os.path.exists(base + ".compact-tmp")
 
 
+def test_persist_publishes_over_logs_only_dir_and_keeps_logs(spark, tmp_path):
+    """A persisted task whose address holds the logs-only directory of
+    an earlier failed run publishes on the next run, and the failed
+    run's logs.json survives the atomic rename."""
+    import os
+
+    store = ImpressionStore(str(tmp_path / "imps"))
+    state = {"fail": True}
+
+    def fn(s, _):
+        if state["fail"]:
+            raise RuntimeError("first run fails")
+        return s.range(5)
+
+    def mk():
+        p = Pipeline("retry")
+        p.add("t", fn)
+        return p
+
+    imp = LocalBackend(store=store, persist={"t"}).run(spark, mk())["impressions"]["t"]
+    assert not store.exists(imp) and store.logs(imp)["status"] == "failed"
+
+    state["fail"] = False
+    p2 = mk()
+    LocalBackend(store=store, persist={"t"}, collect_logs=False).run(spark, p2)
+    assert p2.tasks["t"].status == "finished"
+    assert store.read(spark, imp).count() == 5
+    assert store.logs(imp)["status"] == "failed"  # carried into the deposit
+    assert sorted(os.listdir(store.root)) == store.list_ids() == [imp]
+
+
+def test_write_never_overwrites_a_completed_deposit(spark, tmp_path):
+    """First writer wins: a second write to a deposited address leaves
+    the first deposit's rows and meta untouched."""
+    import os
+
+    store = ImpressionStore(str(tmp_path / "imps"))
+    store.write("d", spark.range(10))
+    created = store.meta("d")["created_at"]
+    store.write("d", spark.range(20))
+    assert store.read(spark, "d").count() == 10
+    assert store.meta("d")["created_at"] == created
+    assert sorted(os.listdir(store.root)) == store.list_ids() == ["d"]
+
+
+def test_failed_persist_leaves_no_deposit_and_no_temp(spark, tmp_path):
+    """A persisted task whose DataFrame raises mid-action leaves
+    neither a deposit nor a temp copy behind."""
+    import os
+
+    store = ImpressionStore(str(tmp_path / "imps"))
+    p = Pipeline("boom")
+    p.add(
+        "t",
+        lambda s, _: s.range(10).select(
+            F.when(F.col("id") == 7, F.raise_error(F.lit("mid-action")))
+            .otherwise(F.col("id"))
+            .alias("id")
+        ),
+    )
+    LocalBackend(store=store, persist={"t"}, collect_logs=False).run(spark, p)
+    assert p.tasks["t"].status == "failed"
+    assert store.list_ids() == [] and os.listdir(store.root) == []
+
+
+def test_concurrent_writes_to_one_address_publish_once(spark, tmp_path):
+    """Two threads writing one address both get readable data back,
+    and exactly one deposit remains."""
+    import os
+    from concurrent.futures import ThreadPoolExecutor
+
+    store = ImpressionStore(str(tmp_path / "imps"))
+
+    def write_and_read(n):
+        store.write("c", spark.range(n).repartition(4))
+        return store.read(spark, "c").count()
+
+    with ThreadPoolExecutor(2) as ex:
+        counts = list(ex.map(write_and_read, (10, 20)))
+    assert counts[0] == counts[1] and counts[0] in (10, 20)
+    assert store.verify("c")["ok"]
+    assert sorted(os.listdir(store.root)) == store.list_ids() == ["c"]
+
+
 def test_kill_landing_mid_task_keeps_failed_status(spark):
     """A kill that lands while a task is executing must not be
     overwritten by that task's completion (r4 advice): the final

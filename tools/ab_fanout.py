@@ -30,21 +30,18 @@ def main() -> None:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     assert variant in ("on", "off")
 
-    cold_root = tempfile.mkdtemp(prefix="yuki_spark-ab-cold-")
-    for var, sub in (
-        ("YUKI_SPARK_DEDUP_STORE", "dedup"),
-        ("YUKI_SPARK_SIM_STORE", "sim"),
-        ("YUKI_SPARK_LM_STORE", "lm"),
-        ("YUKI_SPARK_PIPE_STORE", "pipe"),
-    ):
-        os.environ[var] = os.path.join(cold_root, sub)
-
     import yuki_spark.catalog as cat
+    from yuki_spark.queries.artifact_store import FAMILIES
+
+    from __spark_entry__ import queries  # declares every store
+
+    cold_root = tempfile.mkdtemp(prefix="yuki_spark-ab-cold-")
+    for var in dict.fromkeys(f.env_var for f in FAMILIES):
+        os.environ[var] = os.path.join(cold_root, var.lower())
 
     if variant == "off":
         cat._fan_out = lambda spark, df, path, name: df  # type: ignore[assignment]
 
-    from __spark_entry__ import queries
     from yuki_spark.session import get_spark
 
     qs = queries()

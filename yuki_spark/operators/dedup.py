@@ -128,7 +128,14 @@ def jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:
 def jaccard_candidates(ts: DataFrame, threshold: float) -> DataFrame:
     """Prefix-filtered candidate pairs (doc_a < doc_b) from a
     token_sets table — every pair with Jaccard ≥ threshold is included
-    (no false negatives); callers verify on the full sets."""
+    (no false negatives); callers verify on the full sets.
+
+    Preconditions (what :func:`token_sets` produces): one row per
+    doc_id, and ``toks`` holds DISTINCT tokens with
+    ``set_size == size(toks)``. The output is one row per candidate
+    pair only because of them: the first-shared-token emission below
+    is the only deduplication, and a repeated token (or a repeated
+    doc row) can emit its pair more than once."""
     posts = ts.select("doc_id", "set_size", F.explode("toks").alias("tok"))
     df_tbl = posts.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     # canonical rarest-first order; floor() (not ceil) keeps the prefix
@@ -549,7 +556,16 @@ def minhash_pairs_from(
     moderately-similar band collision and verifying only size-
     compatible ones (measured at sf0.1, t=0.95: 9.6M → 2.2M
     candidates); it never drops a true pair, so LSH recall — and the
-    exact-Jaccard oracle — are untouched."""
+    exact-Jaccard oracle — are untouched.
+
+    Preconditions (what :func:`token_sets` and :func:`band_index`
+    produce): ``ts`` has one row per doc_id, and ``bands`` has EXACTLY
+    one row per (doc_id, band) with all ``N_BANDS`` bands present for
+    every doc. The output is one row per candidate pair only because
+    of them: the least-band emission below is the only deduplication,
+    and it reads band i's predecessors as the first i entries of the
+    doc's band-ordered key vector, so a missing or repeated band row
+    misaligns that test (duplicate or lost candidates)."""
     # LEAST-BAND emission (guide §2.3 — don't emit duplicates at all):
     # a near-dup pair collides in most of its 16 bands, so the band
     # self-join used to emit one row per shared band and collapse them

@@ -12,6 +12,7 @@ Storage layout::
 
     <root>/<impression_id>/data.parquet   (snappy parquet, partitioned)
     <root>/<impression_id>/meta.json      (lineage + schema + tags)
+    <root>/.tmp-<impression_id>-<uuid>/    (a write in flight, see write)
 
 ``watermark`` tags an impression's metadata (Yuki's PIL watermark has
 no data-engine meaning; a metadata tag is the Spark-native analogue).
@@ -25,6 +26,7 @@ import re
 import shutil
 import threading
 import time
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +54,9 @@ def impression_id(
     return hashlib.sha256(payload.encode()).hexdigest()[:32]
 
 
+_TMP_PREFIX = ".tmp-"  # in-flight writes: never an impression id
+
+
 class ImpressionStore:
     def __init__(self, root: str):
         self.root = root
@@ -73,14 +78,14 @@ class ImpressionStore:
     def exists(self, imp_id: str) -> bool:
         return os.path.exists(os.path.join(self._dir(imp_id), "meta.json"))
 
-    def _inventory(self, imp_id: str) -> dict[str, Any]:
-        """Recorded-integrity snapshot of a deposit's data files:
-        per-part byte sizes plus the total row count from the parquet
-        FOOTERS (no Spark job — footer reads are metadata-only, cheap
-        at any deposit size)."""
+    def _inventory(self, imp_dir: str) -> dict[str, Any]:
+        """Recorded-integrity snapshot of the data files under one
+        impression directory: per-part byte sizes plus the total row
+        count from the parquet FOOTERS (no Spark job — footer reads are
+        metadata-only, cheap at any deposit size)."""
         import pyarrow.parquet as pq
 
-        base = os.path.join(self._dir(imp_id), "data.parquet")
+        base = os.path.join(imp_dir, "data.parquet")
         files: dict[str, int] = {}
         unreadable: list[str] = []
         n_rows = 0
@@ -106,30 +111,68 @@ class ImpressionStore:
     ) -> str:
         """Materialize a DataFrame as an immutable impression. The
         meta records an integrity inventory (per-file sizes + footer
-        row count) that :meth:`verify` checks deposits against."""
-        path = os.path.join(self._dir(imp_id), "data.parquet")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        inv = self._inventory(imp_id)
-        if inv.pop("unreadable"):
-            raise RuntimeError(
-                f"impression {imp_id}: freshly written part files are "
-                "unreadable — failed write"
-            )
-        doc = {
-            "impression": imp_id,
-            "created_at": time.time(),
-            "schema": df.schema.jsonValue(),
-            "partition_by": list(partition_by or []),  # compact() re-applies
-            "integrity": inv,
-            "tags": {},
-            **(meta or {}),
-        }
-        with open(os.path.join(self._dir(imp_id), "meta.json"), "w") as f:
-            json.dump(doc, f, indent=2)
-        return path
+        row count) that :meth:`verify` checks deposits against.
+
+        The publish is ATOMIC: data and meta.json are written into a
+        temp directory unique to this call, then renamed to the
+        address whole, so no reader (in this process or another) ever
+        sees a half-written deposit as deposited, and a failed write
+        leaves nothing behind. First writer wins: when a completed
+        deposit already holds the address, this copy is discarded and
+        the deposit stays exactly as it was. Returns the deposit's
+        data path."""
+        tmp = os.path.join(self.root, f"{_TMP_PREFIX}{imp_id}-{uuid.uuid4().hex}")
+        try:
+            writer = df.write
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(os.path.join(tmp, "data.parquet"))
+            inv = self._inventory(tmp)
+            if inv.pop("unreadable"):
+                raise RuntimeError(
+                    f"impression {imp_id}: freshly written part files are "
+                    "unreadable — failed write"
+                )
+            doc = {
+                "impression": imp_id,
+                "created_at": time.time(),
+                "schema": df.schema.jsonValue(),
+                "partition_by": list(partition_by or []),  # compact() re-applies
+                "integrity": inv,
+                "tags": {},
+                **(meta or {}),
+            }
+            with open(os.path.join(tmp, "meta.json"), "w") as f:
+                json.dump(doc, f, indent=2)
+            self._publish(tmp, imp_id)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return os.path.join(self._dir(imp_id), "data.parquet")
+
+    def _publish(self, tmp: str, imp_id: str) -> None:
+        """Rename a complete temp impression to its address, unless a
+        completed deposit is already there. A directory at the address
+        without meta.json is not a deposit: the logs-only directory a
+        failed run's :meth:`write_logs` leaves (its files move into
+        the temp copy, so logs.json survives), or the partial data of
+        an interrupted in-place write (dropped). The emptied directory
+        is then replaced by the rename; if another writer's rename
+        lands first, theirs stands."""
+        final = self._dir(imp_id)
+        with self._lock(imp_id):
+            if self.exists(imp_id):
+                return
+            if os.path.isdir(final):
+                for fn in os.listdir(final):
+                    if os.path.exists(os.path.join(tmp, fn)):
+                        shutil.rmtree(os.path.join(final, fn))
+                    else:
+                        os.rename(os.path.join(final, fn), os.path.join(tmp, fn))
+            try:
+                os.rename(tmp, final)
+            except OSError:
+                if not self.exists(imp_id):
+                    raise
 
     def verify(self, imp_id: str, deep: bool = False) -> dict[str, Any]:
         """Integrity check of a deposited impression against its
@@ -161,7 +204,7 @@ class ImpressionStore:
                     "problems": ["no inventory recorded (pre-integrity deposit)"],
                 }
             problems: list[str] = []
-            current = self._inventory(imp_id)
+            current = self._inventory(self._dir(imp_id))
             for rel in current["unreadable"]:
                 problems.append(f"{rel}: unreadable parquet footer")
             for rel, size in recorded["files"].items():
@@ -288,8 +331,12 @@ class ImpressionStore:
             json.dump(m, f, indent=2)
 
     def list_ids(self) -> list[str]:
+        # an in-flight write's temp directory holds meta.json before
+        # its rename: never an impression
         return sorted(
-            d for d in os.listdir(self.root) if self.exists(d)
+            d
+            for d in os.listdir(self.root)
+            if not d.startswith(_TMP_PREFIX) and self.exists(d)
         )
 
     def drop(self, imp_id: str) -> None:
@@ -449,7 +496,7 @@ class ImpressionStore:
             # integrity inventory (content-preserving, so the row
             # count must survive — a mismatch here would be a real
             # compaction bug surfacing through verify())
-            inv = self._inventory(imp_id)
+            inv = self._inventory(self._dir(imp_id))
             inv.pop("unreadable")
             meta["integrity"] = inv
             with open(os.path.join(self._dir(imp_id), "meta.json"), "w") as f:
@@ -636,7 +683,9 @@ class ImpressionStore:
         # repeatedly-failing pipeline grows the store without bound
         deposited = set(self.list_ids())
         for d in sorted(os.listdir(self.root)):
-            if d in deposited:
+            # an in-flight write's temp directory may hold the logs.json
+            # handed over by a logs-only address: never a victim
+            if d in deposited or d.startswith(_TMP_PREFIX):
                 continue
             lp = os.path.join(self._dir(d), "logs.json")
             if not os.path.exists(lp):

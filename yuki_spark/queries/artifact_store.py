@@ -2,30 +2,42 @@
 eating its own O5 dogfood (SURVEY §2.1: ImpressionStore,
 skip-if-deposited) at the QUERY layer.
 
-Two families consume this machinery:
+Five families consume this machinery, each declared once as a
+:class:`Family`:
 
-- :mod:`.dedup_family` — the documents near-dup pipeline (set groups,
-  token sets, verified pairs, CC labels) shared by d2/d3/d11/d20/d33;
-- :mod:`.sim_family`  — ANN index results (exact/LSH/IVF/PQ top-k,
-  the kNN graph) shared by s3/s4/s8/s11 and their evaluation
-  harnesses s6/s12.
+- ``dedup`` (:mod:`.dedup_family`) — the documents near-dup pipeline
+  (set groups, token sets, verified pairs, CC labels) shared by
+  d2/d3/d4/d11/d20/d33/d50;
+- ``sim`` (:mod:`.sim_family`) — ANN index results (exact/LSH/IVF/PQ
+  top-k, the kNN graph) shared by the s-keys and their evaluation
+  harnesses s6/s12/s17;
+- ``lm`` (:mod:`.lm_family`) — trained-model tables: the bigram and
+  trigram LM per-doc scores and the quality classifier (d52/d54/d56/
+  d59/d60);
+- ``bpe`` (:mod:`.docs`) — the BPE-tokenized vocabulary and the
+  learned merges (d44/d46/d57/d58), kept in the dedup store root;
+- ``pipe`` (:mod:`.curation`) — the composed curation DAG (pl1), whose
+  deposits the Pipeline's LocalBackend writes; the family supplies its
+  root and its code version only.
 
 Contract: an artifact's address is a sha over (key, family version,
 dep ids) where the dep ids start from a TABLE FINGERPRINT (part-file
 relpaths + byte sizes + mtimes + footer probes + any parameters). A
 regenerated input or changed parameter produces a new address and a
-fresh compute — never a stale reuse; a changed builder requires a
-family-version bump (the store's O5 contract). An unwritable store root degrades to an
-unpersisted lazy-checkpointed build: correctness is never hostage to
-a disk.
+fresh compute — never a stale reuse; the family version folds in the
+builder code's hash, so a changed builder does too (the store's O5
+contract). An unwritable store root degrades to an unpersisted
+lazy-checkpointed build: correctness is never hostage to a disk. How a
+deposit is published (atomically, first writer wins) is the
+:class:`~yuki_spark.pipeline.impressions.ImpressionStore`'s business.
 """
 from __future__ import annotations
 
 import hashlib
+import importlib
 import inspect
 import json
 import os
-import shutil
 import stat as stat_mod
 import tempfile
 import threading
@@ -91,15 +103,8 @@ def default_store_root(env_var: str, name: str) -> str | None:
 
 
 def code_fingerprint(*modules) -> str:
-    """Hash of the given modules' SOURCE — folded into a family's
-    version string so ANY edit to the builder code invalidates its
-    deposits automatically (the query-layer analogue of the backend's
-    ``plan_hash=True``). Without this, an unbumped manual version
-    would let the correctness gates silently validate a STALE
-    deposit's output after a code change — the exact regression the
-    gates exist to catch. At production scale a deployment that wants
-    stable reuse across code releases pins an explicit version
-    instead; for the gate corpora recompute-on-edit costs seconds."""
+    """Hash of the given modules' SOURCE (see :class:`Family` for why
+    it is folded into every artifact's version)."""
     h = hashlib.sha256()
     for m in modules:
         h.update(inspect.getsource(m).encode())
@@ -153,14 +158,10 @@ def deposit_or_reuse(
     ``computes[name]`` increments exactly when the builder ran — the
     observability hook the reuse tests assert on.
 
-    The build lock serializes in-process builders (run_parallel-style
-    concurrency would otherwise race two identical writes). ACROSS
-    processes the publish is ATOMIC: the deposit is written under a
-    per-pid temp address and renamed into place — a reader can never
-    observe a half-written deposit as deposited (meta.json only
-    exists inside the temp directory until the rename), and a lost
-    race (rename target already exists) discards the temp copy and
-    reads the winner — no overwrite of a completed deposit, ever.
+    The build lock serializes in-process builders of one address, so
+    the builder runs at most once per address per process; across
+    processes :meth:`ImpressionStore.write` publishes atomically and
+    the first writer wins.
 
     ANY store failure (unwritable root, disk-full mid-write, a
     concurrent sweep) degrades to the unpersisted lazy plan the
@@ -179,22 +180,78 @@ def deposit_or_reuse(
             return store.read(spark, imp), imp
         df = builder()
         computes[name] = computes.get(name, 0) + 1
-        if store is None:
-            return df.localCheckpoint(eager=False), imp
-        tmp_id = f"{imp}-tmp{os.getpid()}"
-        try:
-            store.write(tmp_id, df, meta={"task": key, "deps": dep_ids})
-            meta = store.meta(tmp_id)
-            meta["impression"] = imp
-            with open(os.path.join(store._dir(tmp_id), "meta.json"), "w") as f:
-                json.dump(meta, f, indent=2)
+        if store is not None:
             try:
-                os.rename(store._dir(tmp_id), store._dir(imp))
-            except OSError:
-                # lost the cross-process race: the winner's deposit is
-                # complete (it was renamed whole) — read theirs
-                shutil.rmtree(store._dir(tmp_id), ignore_errors=True)
-            return store.read(spark, imp), imp
-        except Exception:  # noqa: BLE001 — degrade, never fail the query
-            shutil.rmtree(store._dir(tmp_id), ignore_errors=True)
-            return df.localCheckpoint(eager=False), imp
+                store.write(imp, df, meta={"task": key, "deps": dep_ids})
+                return store.read(spark, imp), imp
+            except Exception:  # noqa: BLE001 — degrade, never fail the query
+                pass
+        return df.localCheckpoint(eager=False), imp
+
+
+FAMILIES: list[Family] = []  # every declared family, in import order
+
+
+class Family:
+    """One artifact store, declared once: ``name`` prefixes its
+    artifacts' keys (``"<name>.<artifact>"``), ``env_var`` overrides
+    its root, and ``version`` prefixes every artifact's version.
+
+    An artifact's version is ``version + "+" +`` a hash of the source
+    of the modules its builder executes (:func:`code_fingerprint`), so
+    ANY edit to that code invalidates the deposit automatically: the
+    correctness gates can never validate a stale deposit's output
+    after a code change (the query-layer analogue of the backend's
+    ``plan_hash=True``). Bump ``version`` only for a deliberate
+    semantic change that touches none of those modules (e.g. a
+    constant moved). At production scale a deployment that wants
+    stable reuse across code releases pins an explicit version
+    instead; for the gate corpora recompute-on-edit costs seconds."""
+
+    def __init__(self, name: str, env_var: str, version: str):
+        self.name, self.env_var, self.version = name, env_var, version
+        self.computes: dict[str, int] = {}
+        FAMILIES.append(self)
+
+    def root(self) -> str | None:
+        """``$env_var`` verbatim, else a private temp-dir root named
+        after the env var (families sharing an env var share a root);
+        None when that fallback is not exclusively ours."""
+        return default_store_root(self.env_var, self.env_var.lower())
+
+    def code_version(self, modules: tuple[str, ...]) -> str:
+        """The family version plus the source hash of ``modules``
+        (dotted names, imported at call time — so a builder module
+        that imports its family module can still be named)."""
+        return self.version + "+" + code_fingerprint(
+            *(importlib.import_module(m) for m in modules)
+        )
+
+    def artifact(
+        self,
+        spark: SparkSession,
+        name: str,
+        dep_ids: list[str],
+        builder: Callable[[], DataFrame],
+        modules: tuple[str, ...],
+    ) -> tuple[DataFrame, str]:
+        """Deposit-or-reuse artifact ``name`` (see
+        :func:`deposit_or_reuse` for the locking and degraded-disk
+        contract); ``modules`` are the dotted names of every module
+        the builder executes. Returns (DataFrame, address).
+
+        Concurrency rule: callers overlap independent builds on thread
+        pools over ONE session, so builders may run concurrently and
+        must not mutate session conf. A builder may call another
+        artifact's accessor on its own thread (nested builds), never
+        from a second thread it starts."""
+        return deposit_or_reuse(
+            spark,
+            self.root(),
+            f"{self.name}.{name}",
+            self.code_version(modules),
+            dep_ids,
+            builder,
+            self.computes,
+            name,
+        )

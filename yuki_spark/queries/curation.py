@@ -48,21 +48,27 @@ from ..catalog import load
 from ..operators import bpe, dedup, html, text
 from . import dedup_family
 from . import docs as docsq
-from .artifact_store import (
-    code_fingerprint,
-    default_store_root,
-    table_fingerprint,
-)
+from .artifact_store import Family, table_fingerprint
 
+PIPE = Family("pipe", "YUKI_SPARK_PIPE_STORE", "r14-1")
+# every module a stage executes: the task versions cover their code
+_STAGE_MODULES = (
+    __name__,
+    "yuki_spark.queries.docs",
+    "yuki_spark.queries.dedup_family",
+    "yuki_spark.operators.text",
+    "yuki_spark.operators.html",
+    "yuki_spark.operators.dedup",
+    "yuki_spark.operators.bpe",
+    "yuki_spark.functions",
+)
 
 _FALLBACK_ROOT: "str | None" = None
 _FALLBACK_LOCK = threading.Lock()
 
 
 def store_root() -> str:
-    root = default_store_root(
-        "YUKI_SPARK_PIPE_STORE", "yuki_spark-pipe-family"
-    )
+    root = PIPE.root()
     if root is None:
         # the shared temp root is not exclusively ours: degrade to ONE
         # private per-process store (never a planted reuse — the
@@ -78,20 +84,6 @@ def store_root() -> str:
                 _FALLBACK_ROOT = tempfile.mkdtemp(prefix="yuki_spark-pipe-")
         root = _FALLBACK_ROOT
     return root
-
-
-def _code_version() -> str:
-    """Task version string: a code hash over every module a stage
-    executes, so any edit produces new impression addresses (the O5
-    version-bump contract, automated — the gates can never validate
-    a stale deposit after a code change)."""
-    import sys
-
-    from .. import functions as fns
-
-    return "r14-1+" + code_fingerprint(
-        sys.modules[__name__], docsq, dedup_family, text, html, dedup, bpe, fns
-    )
 
 
 # ---- stages (pure frame functions — the DAG and the equality test
@@ -276,7 +268,7 @@ def build_pipeline(spark: SparkSession, sf_dir: str):
     content-addressed over code AND data."""
     from ..pipeline.dag import Pipeline
 
-    v = _code_version()
+    v = PIPE.code_version(_STAGE_MODULES)
     p = Pipeline("curation_run")
     p.source(
         "documents",

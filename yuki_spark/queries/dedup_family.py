@@ -27,13 +27,12 @@ Artifacts (rep-level — small next to the corpus text):
 - ``rep_lsh95``     — d3's banded-candidate pairs, exact-verified at .95
 - ``rep_clusters08``— CC labels over ``rep_pairs08`` (d11/d20)
 
-Content address: (artifact name, FAMILY_VERSION, corpus fingerprint +
+Content address: (artifact name, family version, corpus fingerprint +
 upstream artifact addresses). The fingerprint covers the documents
 table's part-file names/sizes/mtimes plus the doc_id cap, so a
 regenerated corpus (same path, new bytes) or a changed cap produces a
-new address and a fresh compute — never a stale reuse. FAMILY_VERSION
-must be bumped on ANY semantic change to the builders (the store's O5
-version-bump contract).
+new address and a fresh compute — never a stale reuse; the family
+version covers the builder code (see artifact_store.Family).
 
 100 TB shape: these deposits ARE what a production dedup run persists —
 the signature/pair tables are O(corpus tokens) and O(near-dup edges),
@@ -45,77 +44,35 @@ filesystem path).
 """
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load, table_rows
 from ..operators import dedup
-from .artifact_store import (
-    code_fingerprint,
-    default_store_root,
-    deposit_or_reuse,
-    table_fingerprint,
+from .artifact_store import Family, table_fingerprint
+
+FAMILY = Family("dedup", "YUKI_SPARK_DEDUP_STORE", "r6-1")
+COMPUTES = FAMILY.computes
+store_root = FAMILY.root
+# operators/dedup.py builds on functions.tokens/portable_hash60 and
+# operators/text's tokenizer, and rep_phash6 on multimodal + codecs:
+# every address folds them in, so an edit to tokenization invalidates
+# every deposit derived from it
+_MODULES = (
+    __name__,
+    "yuki_spark.operators.dedup",
+    "yuki_spark.functions",
+    "yuki_spark.operators.text",
+    "yuki_spark.operators.multimodal",
+    "yuki_spark.operators.codecs",
 )
-
-# The effective version folds in a hash of the builder code (this
-# module + operators/dedup.py): any edit auto-invalidates deposits, so
-# the correctness gates can never validate a stale deposit's output
-# after a code change. FAMILY_VERSION remains for deliberate semantic
-# bumps that don't change these two files (e.g. a constant moved).
-FAMILY_VERSION = "r6-1"
 PAIR_THRESHOLD = 0.8  # the one exact-pairs run; 0.95 consumers filter it
-
-# artifact name -> number of times this process actually COMPUTED it
-# (as opposed to reusing a deposit) — the observability hook the reuse
-# test asserts on.
-COMPUTES: dict[str, int] = {}
-
-
-def store_root() -> str | None:
-    return default_store_root("YUKI_SPARK_DEDUP_STORE", "yuki_spark-dedup-family")
 
 
 def corpus_fingerprint(sf_dir: str, cap: int) -> str:
     """Identity of the capped documents corpus (artifact_store
     fingerprint over the documents table + the doc_id cap)."""
     return table_fingerprint(sf_dir, "documents", {"cap": cap})
-
-
-def _artifact(
-    spark: SparkSession,
-    name: str,
-    dep_ids: list[str],
-    builder: Callable[[], DataFrame],
-) -> tuple[DataFrame, str]:
-    """Deposit-or-reuse one family artifact (see
-    artifact_store.deposit_or_reuse for the locking / degraded-disk
-    contract)."""
-    import sys
-
-    from .. import functions as fns
-    from ..operators import codecs as codecs_mod
-    from ..operators import multimodal as mm_mod
-    from ..operators import text as text_mod
-
-    # operators/dedup.py builds on functions.tokens/portable_hash60 and
-    # operators/text's tokenizer — fold those transitive deps into the
-    # address too, so an edit to tokenization invalidates every deposit
-    # derived from it (the gates must never validate a stale deposit).
-    version = FAMILY_VERSION + "+" + code_fingerprint(
-        sys.modules[__name__], dedup, fns, text_mod, mm_mod, codecs_mod
-    )
-    return deposit_or_reuse(
-        spark,
-        store_root(),
-        f"dedup_family.{name}",
-        version,
-        dep_ids,
-        builder,
-        COMPUTES,
-        name,
-    )
 
 
 def artifacts(
@@ -151,49 +108,48 @@ def artifacts(
     def docs() -> DataFrame:
         return load(spark, sf_dir, "documents").where(F.col("doc_id") < cap)
 
+    def deposit(name, dep_ids, builder):
+        return FAMILY.artifact(spark, name, [fp, *dep_ids], builder, _MODULES)
+
     out: dict[str, DataFrame] = {}
-    g, g_id = _artifact(spark, "groups", [fp], lambda: dedup.set_groups(docs()))
+    g, g_id = deposit("groups", [], lambda: dedup.set_groups(docs()))
     out["groups"] = g
 
     def rep_ts_builder() -> DataFrame:
         reps = dedup._rep_docs(docs(), g)
         return dedup.token_sets(reps)
 
-    rts, rts_id = _artifact(spark, "rep_ts", [fp, g_id], rep_ts_builder)
+    rts, rts_id = deposit("rep_ts", [g_id], rep_ts_builder)
     out["rep_ts"] = rts
 
     if "rep_pairs08" in want:
-        rp08, rp08_id = _artifact(
-            spark,
+        rp08, rp08_id = deposit(
             "rep_pairs08",
-            [fp, rts_id],
+            [rts_id],
             lambda: dedup.jaccard_pairs_from(rts, PAIR_THRESHOLD),
         )
         out["rep_pairs08"] = rp08
         if "rep_clusters08" in want:
-            out["rep_clusters08"], _ = _artifact(
-                spark,
+            out["rep_clusters08"], _ = deposit(
                 "rep_clusters08",
-                [fp, rp08_id],
+                [rp08_id],
                 lambda: dedup.dedup_clusters(out["rep_pairs08"]),
             )
     if "rep_bands" in want:
-        rbands, rbands_id = _artifact(
-            spark, "rep_bands", [fp, rts_id], lambda: dedup.band_index(rts)
+        rbands, rbands_id = deposit(
+            "rep_bands", [rts_id], lambda: dedup.band_index(rts)
         )
         out["rep_bands"] = rbands
         if "rep_lsh95" in want:
-            out["rep_lsh95"], _ = _artifact(
-                spark,
+            out["rep_lsh95"], _ = deposit(
                 "rep_lsh95",
-                [fp, rts_id, rbands_id],
+                [rts_id, rbands_id],
                 lambda: dedup.minhash_pairs_from(rts, rbands, 0.95),
             )
     if "rep_simhash3" in want:
-        out["rep_simhash3"], _ = _artifact(
-            spark,
+        out["rep_simhash3"], _ = deposit(
             "rep_simhash3",
-            [fp, rts_id],
+            [rts_id],
             lambda: dedup.simhash_pairs_from(rts, max_hamming=3),
         )
     if "rep_phash6" in want:
@@ -203,10 +159,9 @@ def artifacts(
         # simhash — encode real PNGs, decode, dHash, pigeonhole-band
         from ..operators import multimodal as mm
 
-        out["rep_phash6"], _ = _artifact(
-            spark,
+        out["rep_phash6"], _ = deposit(
             "rep_phash6",
-            [fp, rts_id],
+            [rts_id],
             # fused synth→decode→dHash (one Arrow pass — the PNG bytes
             # stay inside the Python worker; rules identical to the
             # composed path, pinned in tests)

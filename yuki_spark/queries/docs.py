@@ -14,7 +14,8 @@ import os
 from ..catalog import load, table_rows
 from ..functions import DEC, portable_hash60, sql_portable_hash60
 from ..operators import bpe, dedup, html, multimodal, sampling, text
-from . import dedup_family
+from . import dedup_family, lm_family
+from .artifact_store import Family, table_fingerprint
 
 # The near-dup pair queries (d2/d3/d4/d11/d20) bound their slice by a
 # doc_id cap so the PAIRWISE oracle verification stays bounded. The
@@ -496,7 +497,10 @@ def d12_subword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_COMPUTES: dict[str, int] = {}  # observability hook (reuse tests)
+# the BPE deposits share the dedup store root (same env var)
+_BPE = Family("bpe", dedup_family.FAMILY.env_var, "1")
+_BPE_COMPUTES = _BPE.computes  # observability hook (reuse tests)
+_BPE_MODULES = ("yuki_spark.operators.bpe", __name__)
 
 
 def _bpe_vocab(spark: SparkSession, sf_dir: str, vocab) -> DataFrame:
@@ -508,23 +512,9 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str, vocab) -> DataFrame:
     exactly the persist-the-tokenizer-output shape a production
     pipeline uses. Falls back to computing in-plan when the store is
     unavailable (deposit_or_reuse's contract)."""
-    import sys
-
-    from ..operators import bpe as bpe_mod
-    from . import dedup_family
-    from .artifact_store import code_fingerprint, deposit_or_reuse, table_fingerprint
-
     fp = table_fingerprint(sf_dir, "documents", {"what": "bpe_vocab"})
-    version = "1+" + code_fingerprint(bpe_mod, sys.modules[__name__])
-    df, _ = deposit_or_reuse(
-        spark,
-        dedup_family.store_root(),
-        "bpe.vocab",
-        version,
-        [fp],
-        lambda: bpe.vocab_bpe(vocab),
-        _BPE_COMPUTES,
-        "bpe_vocab",
+    df, _ = _BPE.artifact(
+        spark, "bpe_vocab", [fp], lambda: bpe.vocab_bpe(vocab), _BPE_MODULES
     )
     return df
 
@@ -588,17 +578,6 @@ def _bpe_learned(
     never collect to the driver either way). Returns ``(report_df,
     vt_df_or_None)``; the report is UNORDERED (d57 re-applies its
     iteration ordering)."""
-    import sys
-
-    from ..operators import bpe as bpe_mod
-    from . import dedup_family
-    from .artifact_store import (
-        code_fingerprint,
-        deposit_or_reuse,
-        table_fingerprint,
-    )
-
-    version = "1+" + code_fingerprint(bpe_mod, sys.modules[__name__])
     fp = table_fingerprint(sf_dir, "documents", {"what": "bpe_learned"})
     stash: dict = {}
 
@@ -610,19 +589,12 @@ def _bpe_learned(
             .orderBy(F.desc("freq"), F.asc("word"))
             .limit(D57_VOCAB)
         )
-        report, tops = bpe_mod.bpe_train_merge_frames(vocab, D57_MERGES)
+        report, tops = bpe.bpe_train_merge_frames(vocab, D57_MERGES)
         stash["tops"] = tops
         return report
 
-    rep, rep_id = deposit_or_reuse(
-        spark,
-        dedup_family.store_root(),
-        "bpe.merges57",
-        version,
-        [fp],
-        build_merges,
-        _BPE_COMPUTES,
-        "bpe_merges57",
+    rep, rep_id = _BPE.artifact(
+        spark, "bpe_merges57", [fp], build_merges, _BPE_MODULES
     )
     if not need_vt:
         return rep, None
@@ -640,19 +612,12 @@ def _bpe_learned(
                 )
                 for i in range(1, D57_MERGES + 1)
             ]
-        return bpe_mod.bpe_apply_merge_frames(
+        return bpe.bpe_apply_merge_frames(
             _bpe_corpus_words(spark, sf_dir).distinct(), tops
         )
 
-    vt, _ = deposit_or_reuse(
-        spark,
-        dedup_family.store_root(),
-        "bpe.learned_vocab",
-        version,
-        [fp, rep_id],
-        build_vt,
-        _BPE_COMPUTES,
-        "bpe_learned_vocab",
+    vt, _ = _BPE.artifact(
+        spark, "bpe_learned_vocab", [fp, rep_id], build_vt, _BPE_MODULES
     )
     return rep, vt
 
@@ -2172,8 +2137,6 @@ def d59_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver. Since the r14 review the run lives inside the model
     family's one-time clf_curve/clf_w deposit (queries/lm_family.py):
     this key and d60 share ONE training run per corpus."""
-    from . import lm_family
-
     report, _w = lm_family.clf_artifacts(spark, sf_dir)
     return report.orderBy("iteration")
 
@@ -2213,7 +2176,6 @@ def d60_learned_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame
     join back to the corpus frame for (source, n_tokens), one
     single-row percentile broadcast, one source hash-agg."""
     from ..operators import classifier
-    from . import lm_family
 
     docs = load(spark, sf_dir, "documents")
     feat = _clf_features(docs)
@@ -2755,8 +2717,6 @@ def d52_bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Since r14 the per-doc score table is the lm_family ``per_doc2``
     deposit (train once per corpus, the d54/d56 discipline one order
     down); this key reads the deposit and rolls up per source."""
-    from . import lm_family
-
     per_doc = lm_family.scored_per_doc2(spark, sf_dir)
     # avg is TRANSITION-weighted (Σ quantized bits / Σ transitions):
     # the decimal sums are exact in any order and there is exactly ONE
@@ -2923,8 +2883,6 @@ def d56_trigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     score once, both consumers read; the r13 verdict's named
     improvement): this key's visible plan is the deposit read + one
     source hash-agg."""
-    from . import lm_family
-
     per_doc = lm_family.scored_per_doc3(spark, sf_dir)
     return (
         per_doc.groupBy("source")
@@ -2973,8 +2931,6 @@ def d54_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries/lm_family.py, r14) + one corpus-frame join for
     (lang, n_tokens), one single-row percentile broadcast, one lang
     hash-agg."""
-    from . import lm_family
-
     t = text.with_tokens(load(spark, sf_dir, "documents"))
     per_doc = lm_family.scored_per_doc3(spark, sf_dir)
     scored = per_doc.join(t.select("doc_id", "lang", "n_tokens"), "doc_id")

@@ -25,8 +25,7 @@ Both consumers (d56's per-source report, d54's percentile gate) read
 the deposit and do cheap per-doc-grain rollups. The content address
 covers the documents table fingerprint plus a code hash of this
 module, the scoring chain's home module (queries/docs.py), the
-tokenizer, and the portable-log2 primitives — any edit invalidates
-the deposit, so the correctness gates can never validate a stale one.
+tokenizer, and the portable-log2 primitives (see artifact_store.Family).
 
 100 TB shape: the deposit IS what a production quality gate persists —
 a scored-docs table at held-out grain; re-scoring after a corpus
@@ -35,50 +34,45 @@ reads scores instead of re-training the LM.
 """
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
-from .artifact_store import (
-    code_fingerprint,
-    default_store_root,
-    deposit_or_reuse,
-    table_fingerprint,
+from ..catalog import load
+from .artifact_store import Family, table_fingerprint
+
+FAMILY = Family("lm", "YUKI_SPARK_LM_STORE", "r14-1")
+COMPUTES = FAMILY.computes
+# each artifact's version folds in exactly the modules its builder
+# executes: an edit to an UNRELATED trainer doesn't re-pay a
+# corpus-sized build (r14 review: invalidation stays precise)
+_LM_MODULES = (
+    __name__,
+    "yuki_spark.queries.docs",
+    "yuki_spark.functions",
+    "yuki_spark.operators.text",
 )
-
-# Effective version folds in a code hash of this module + the chain's
-# source modules (see dedup_family for the rationale); bump for
-# deliberate semantic changes that don't touch those files.
-LM_VERSION = "r14-1"
-
-COMPUTES: dict[str, int] = {}
+_CLF_MODULES = _LM_MODULES + ("yuki_spark.operators.classifier",)
 
 
-def store_root() -> str | None:
-    return default_store_root("YUKI_SPARK_LM_STORE", "yuki_spark-lm-family")
+def _corpus_fp(sf_dir: str) -> str:
+    return table_fingerprint(sf_dir, "documents", {})
 
 
-def _artifact(spark, sf_dir: str, name: str, dep_extra, builder, modules):
-    """Deposit-or-reuse one model-training artifact for this corpus.
-    The version folds a code hash of exactly the ``modules`` the
-    builder executes — any edit there invalidates, so the gates can
-    never validate a stale deposit, while an edit to an UNRELATED
-    trainer doesn't spuriously re-pay a corpus-sized build (r14
-    review: invalidation stays precise per artifact)."""
-    import sys
+def _scored_per_doc(
+    spark: SparkSession, sf_dir: str, name: str, chain: Callable
+) -> DataFrame:
+    """Deposit-or-reuse one LM per-doc score table: ``chain`` (a
+    docs.py scoring chain) over the tokenized corpus."""
+    from ..operators import text as text_mod
 
-    version = LM_VERSION + "+" + code_fingerprint(
-        sys.modules[__name__], *modules
+    def builder() -> DataFrame:
+        return chain(text_mod.with_tokens(load(spark, sf_dir, "documents")))
+
+    df, _ = FAMILY.artifact(
+        spark, name, [_corpus_fp(sf_dir)], builder, _LM_MODULES
     )
-    fp = table_fingerprint(sf_dir, "documents", {})
-    return deposit_or_reuse(
-        spark,
-        store_root(),
-        f"lm_family.{name}",
-        version,
-        [fp] + list(dep_extra),
-        builder,
-        COMPUTES,
-        name,
-    )
+    return df
 
 
 def scored_per_doc3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,25 +81,9 @@ def scored_per_doc3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the UNORDERED deposit read — consumers' rollups are
     order-insensitive by construction (DEC-exact sums, per-doc
     doubles computed before the deposit)."""
-    import importlib
+    from . import docs
 
-    from .. import functions as fns
-    from ..catalog import load
-    from ..operators import text as text_mod
-
-    # the scoring chain lives in queries/docs.py, which imports this
-    # module — import by name to avoid the import-time cycle (the
-    # sim_family pattern)
-    docs_mod = importlib.import_module(__package__ + ".docs")
-
-    def builder() -> DataFrame:
-        t = text_mod.with_tokens(load(spark, sf_dir, "documents"))
-        return docs_mod._d56_per_doc(t)
-
-    df, _ = _artifact(
-        spark, sf_dir, "per_doc3", [], builder, (docs_mod, fns, text_mod)
-    )
-    return df
+    return _scored_per_doc(spark, sf_dir, "per_doc3", docs._d56_per_doc)
 
 
 def scored_per_doc2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,22 +94,9 @@ def scored_per_doc2(spark: SparkSession, sf_dir: str) -> DataFrame:
     call). Same bit-exact parquet roundtrip argument: sum_bits is
     DECIMAL, mean_bits is computed per doc BEFORE the deposit, and
     d52's per-source rollup is order-insensitive on those columns."""
-    import importlib
+    from . import docs
 
-    from .. import functions as fns
-    from ..catalog import load
-    from ..operators import text as text_mod
-
-    docs_mod = importlib.import_module(__package__ + ".docs")
-
-    def builder() -> DataFrame:
-        t = text_mod.with_tokens(load(spark, sf_dir, "documents"))
-        return docs_mod._d52_per_doc(t)
-
-    df, _ = _artifact(
-        spark, sf_dir, "per_doc2", [], builder, (docs_mod, fns, text_mod)
-    )
-    return df
+    return _scored_per_doc(spark, sf_dir, "per_doc2", docs._d52_per_doc)
 
 
 def clf_artifacts(spark: SparkSession, sf_dir: str):
@@ -143,15 +108,10 @@ def clf_artifacts(spark: SparkSession, sf_dir: str):
     train zero times; a half-damaged store falls back to one honest
     retrain). Returns ``(curve_df, w_df)`` unordered — d59 re-applies
     its iteration ordering, d60 only joins the weights."""
-    import importlib
-
-    from .. import functions as fns
-    from ..catalog import load
     from ..operators import classifier
-    from ..operators import text as text_mod
+    from . import docs as docs_mod
 
-    docs_mod = importlib.import_module(__package__ + ".docs")
-    mods = (docs_mod, fns, text_mod, classifier)
+    fp = _corpus_fp(sf_dir)
     stash: dict = {}
 
     def _train():
@@ -167,8 +127,8 @@ def clf_artifacts(spark: SparkSession, sf_dir: str):
         stash["w"] = w
         return report
 
-    curve, curve_id = _artifact(
-        spark, sf_dir, "clf_curve", [], build_curve, mods
+    curve, curve_id = FAMILY.artifact(
+        spark, "clf_curve", [fp], build_curve, _CLF_MODULES
     )
 
     def build_w() -> DataFrame:
@@ -180,5 +140,5 @@ def clf_artifacts(spark: SparkSession, sf_dir: str):
         _report, w = _train()
         return w
 
-    w, _ = _artifact(spark, sf_dir, "clf_w", [curve_id], build_w, mods)
+    w, _ = FAMILY.artifact(spark, "clf_w", [fp, curve_id], build_w, _CLF_MODULES)
     return curve, w

@@ -20,8 +20,8 @@ bit-exact) through the impression store:
 Addresses cover the embeddings table fingerprint (part-file
 sizes/mtimes — the adaptive plane/probe parameters derive from its
 row count, so they are covered transitively) plus the query
-parameters; SIM_VERSION must be bumped on any algorithm change (O5
-version-bump contract). Ordering is NOT part of a deposit (parquet
+parameters; the family version covers the builder code (see
+artifact_store.Family). Ordering is NOT part of a deposit (parquet
 has no order): every consumer re-applies the operator's documented
 ``orderBy`` on read.
 """
@@ -32,22 +32,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .artifact_store import (
-    code_fingerprint,
-    default_store_root,
-    deposit_or_reuse,
-    table_fingerprint,
-)
+from .artifact_store import Family, table_fingerprint
 
-# Effective version folds in a code hash of this module +
-# operators/similarity.py (see dedup_family for the rationale).
-SIM_VERSION = "r6-1"
-
-COMPUTES: dict[str, int] = {}
-
-
-def store_root() -> str | None:
-    return default_store_root("YUKI_SPARK_SIM_STORE", "yuki_spark-sim-family")
+FAMILY = Family("sim", "YUKI_SPARK_SIM_STORE", "r6-1")
+COMPUTES = FAMILY.computes
+# the builder lambdas live in queries/sim.py (e.g. s13's embedding
+# slice), so its source is part of every address
+_MODULES = (__name__, "yuki_spark.operators.similarity", "yuki_spark.queries.sim")
 
 
 def result(
@@ -60,29 +51,6 @@ def result(
     """Deposit-or-reuse one ANN result table for this corpus+params.
     Returns the UNORDERED deposit read — callers re-apply their
     operator's output ordering."""
-    import importlib
-    import sys
-
-    from ..operators import similarity
-
-    # The builder lambdas live in queries/sim.py (e.g. s13's embedding
-    # slice), so its source MUST be part of the address — without it an
-    # edit there keeps the old address and silently serves a stale
-    # deposit. Import by name: sim.py imports this module, so a direct
-    # `from . import sim` here would be circular at import time.
-    sim_mod = importlib.import_module(__package__ + ".sim")
     fp = table_fingerprint(sf_dir, "embeddings", {"params": params})
-    version = SIM_VERSION + "+" + code_fingerprint(
-        sys.modules[__name__], similarity, sim_mod
-    )
-    df, _ = deposit_or_reuse(
-        spark,
-        store_root(),
-        f"sim_family.{name}",
-        version,
-        [fp],
-        builder,
-        COMPUTES,
-        name,
-    )
+    df, _ = FAMILY.artifact(spark, name, [fp], builder, _MODULES)
     return df
