@@ -148,29 +148,46 @@ def test_ntz_reinterpretation_is_session_tz_invariant(spark):
     """catalog's NTZ fallback must interpret naive micros as UTC
     instants under ANY session timezone — including a wall time
     inside a DST spring-forward gap, where a session-tz cast would
-    shift the instant (the local mapping isn't total there)."""
+    shift the instant (the local mapping isn't total there), a
+    fall-back overlap, a pre-epoch fraction and a leap day. It must
+    also leave the session timezone alone, so 8 threads casting at
+    once under a non-UTC zone all get UTC instants and the zone is
+    unchanged afterwards."""
+    from concurrent.futures import ThreadPoolExecutor
+
     from yuki_spark.catalog import ntz_as_utc_instant
 
     cases = [
-        ("2024-03-01 12:00:00", 1709294400),  # plain noon
-        ("2024-03-10 02:30:00", 1710037800),  # inside the US spring-forward gap
+        ("2024-03-01 12:00:00", 1709294400000000),  # plain noon
+        ("2024-03-10 02:30:00.123456", 1710037800123456),  # US spring-forward gap
+        ("2024-11-03 01:30:00", 1730597400000000),  # US fall-back overlap
+        ("2024-07-04 15:45:30.5", 1720107930500000),  # summer time
+        ("1969-12-31 23:59:59.999999", -1),  # pre-epoch fraction
+        ("1600-02-29 00:00:00", -11670998400000000),  # leap day
+        (None, None),
     ]
+    ntz = spark.createDataFrame([(r,) for r, _ in cases], "raw string").select(
+        F.col("raw").cast("timestamp_ntz").alias("ts"), "raw"
+    )
+    want = {raw: us for raw, us in cases}
+
+    def cast_all() -> dict:
+        rows = ntz_as_utc_instant(ntz, "ts").select(
+            "raw", F.unix_micros("ts").alias("us")
+        )
+        return {r["raw"]: r["us"] for r in rows.collect()}
+
     prev = spark.conf.get("spark.sql.session.timeZone")
     try:
-        for tz in ("Asia/Tokyo", "America/New_York", "UTC"):
+        for tz in ("Asia/Tokyo", "America/New_York", "Asia/Kolkata", "UTC"):
             spark.conf.set("spark.sql.session.timeZone", tz)
-            for raw, want in cases:
-                ntz = spark.createDataFrame([(raw,)], "raw string").select(
-                    F.col("raw").cast("timestamp_ntz").alias("ts")
-                )
-                got = (
-                    ntz_as_utc_instant(ntz, "ts")
-                    .select(F.unix_timestamp("ts"))
-                    .first()[0]
-                )
-                assert got == want, (tz, raw)
-            # the helper restores the caller's session tz
+            assert cast_all() == want, tz
             assert spark.conf.get("spark.sql.session.timeZone") == tz
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            results = list(pool.map(lambda _: cast_all(), range(8)))
+        assert all(r == want for r in results)
+        assert spark.conf.get("spark.sql.session.timeZone") == "America/New_York"
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
 

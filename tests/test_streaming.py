@@ -1076,17 +1076,17 @@ def test_embedding_ingest_dedupes_across_batches(spark, tmp_path):
 
 
 def test_snapshot_atomic_overwrite_and_heal(spark, tmp_path):
-    """_atomic_overwrite stages + rename-swaps: a crash window that
+    """_commit's one-snapshot case stages + rename-swaps: a crash window that
     leaves .old beside a missing live dir heals on the next read; a
     marker-less (partial) snapshot directory fails loud instead of
     reading as a silently truncated snapshot (r4 advice)."""
     import shutil
 
     snap = str(tmp_path / "snap")
-    st._atomic_overwrite(spark.range(10).selectExpr("id AS k"), snap)
+    st._commit(spark, [(snap, spark.range(10).selectExpr("id AS k"))])
     assert st._read_snapshot_or_none(spark, snap).count() == 10
     # second overwrite replaces content, leaves no siblings behind
-    st._atomic_overwrite(spark.range(3).selectExpr("id AS k"), snap)
+    st._commit(spark, [(snap, spark.range(3).selectExpr("id AS k"))])
     assert st._read_snapshot_or_none(spark, snap).count() == 3
     assert not os.path.exists(snap + ".old")
     assert not os.path.exists(snap + ".staged")
@@ -1105,6 +1105,117 @@ def test_snapshot_atomic_overwrite_and_heal(spark, tmp_path):
 
     # true first-batch state (no directory at all) is still None
     assert st._read_snapshot_or_none(spark, snap) is None
+
+
+def _dir_bytes(path: str) -> dict[str, bytes]:
+    """Every file under a snapshot directory (data, markers, checksums)."""
+    out = {}
+    for base, _, names in os.walk(path):
+        for n in names:
+            with open(os.path.join(base, n), "rb") as fh:
+                out[os.path.relpath(os.path.join(base, n), path)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("where", ["snapshots", "side"])
+def test_commit_failed_stage_leaves_live_snapshots_untouched(spark, tmp_path, where):
+    """Phase 1 of _commit writes only ``.staged`` siblings: when a
+    frame's staged write raises — a declared snapshot after one that
+    staged fine, or a side snapshot derived from the staged copies —
+    every live snapshot of the batch stays byte-identical and no
+    ``.old`` is left behind."""
+    paths = [str(tmp_path / n) for n in ("primary", "index", "side")]
+    st._commit(spark, [(p, spark.range(5).selectExpr("id AS k")) for p in paths])
+    before = {p: _dir_bytes(p) for p in paths}
+
+    good = spark.range(2).selectExpr("id AS k")
+    bad = spark.range(5).select(
+        F.when(F.col("id") == 3, F.raise_error(F.lit("injected stage failure")))
+        .otherwise(F.col("id"))
+        .alias("k")
+    )
+    if where == "snapshots":
+        snaps, side = [(paths[0], good), (paths[1], bad), (paths[2], good)], None
+    else:
+        snaps, side = [(paths[0], good), (paths[1], good)], lambda *_: [(paths[2], bad)]
+    with pytest.raises(Exception, match="injected stage failure"):
+        st._commit(spark, snaps, side=side)
+    assert {p: _dir_bytes(p) for p in paths} == before
+    assert not any(os.path.exists(p + ".old") for p in paths)
+
+
+def test_commit_crash_after_first_swap_converges_on_replay(spark, tmp_path, monkeypatch):
+    """A failure between two swaps of one batch leaves the corpus new
+    and the index one batch stale. The batch is uncommitted, so the
+    restart replays it, and a forced replay after that
+    (_force_batch_replay) still lands on exactly the snapshots of an
+    uninterrupted run."""
+    from pyspark.errors import StreamingQueryException
+
+    sdir = tmp_path / "doc_stream"
+    sdir.mkdir()
+    base = "the quick brown fox jumps over the lazy"
+    for i, rows in enumerate(
+        [
+            [(1, f"{base} dog"), (2, f"{base} cat"), (3, "completely different words here")],
+            [(10, f"{base} dog"), (11, "genuinely novel second batch content tokens")],
+        ]
+    ):
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "text": pa.array([r[1] for r in rows]),
+                    "lang": pa.array(["en"] * len(rows)),
+                    "source": pa.array(["s"] * len(rows)),
+                    "n_chars": pa.array([len(r[1]) for r in rows], pa.int64()),
+                }
+            ),
+            sdir / f"part-{i:04d}.parquet",
+        )
+        time.sleep(0.05)
+
+    def run(root):
+        q = st.run_corpus_ingest(
+            st.read_document_stream(spark, str(sdir), max_files_per_trigger=1),
+            str(root / "corpus"),
+            str(root / "index"),
+            str(root / "ckpt"),
+            threshold=0.7,
+        )
+        q.awaitTermination(180)
+
+    def state(root):
+        return [
+            sorted(map(tuple, spark.read.parquet(str(root / snap)).collect()))
+            for snap in ("corpus", "index")
+        ]
+
+    ref, crash = tmp_path / "ref", tmp_path / "crash"
+    run(ref)
+    want = state(ref)
+
+    real_swap, swaps = st._swap, []
+
+    def crashing_swap(spark_, path):
+        swaps.append(path)
+        if len(swaps) == 4:  # batch 1: the corpus swapped, the index not yet
+            raise RuntimeError("injected crash after the first swap")
+        real_swap(spark_, path)
+
+    monkeypatch.setattr(st, "_swap", crashing_swap)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run(crash)
+    monkeypatch.setattr(st, "_swap", real_swap)
+    corpus_now, index_now = state(crash)
+    assert corpus_now == want[0] and index_now != want[1]  # the crash window is real
+    assert not os.path.exists(str(crash / "index") + ".old")
+
+    run(crash)  # the uncommitted batch replays
+    assert state(crash) == want
+    _force_batch_replay(str(crash / "ckpt"))
+    run(crash)
+    assert state(crash) == want
 
 
 def test_histogram_accumulator_and_psi_drift(spark, event_dir, tmp_path):

@@ -285,19 +285,20 @@ def ntz_as_utc_instant(df: DataFrame, colname: str) -> DataFrame:
     session timezone. A bare cast interprets the naive value in the
     *session* tz - which both shifts the instant by the tz offset and,
     in DST zones, mangles wall times inside a spring-forward gap (the
-    local-time mapping is not total there). Instead the cast is
-    analyzed while the session tz is pinned to UTC: Spark's
-    ResolveTimeZone stamps the zone into the Cast expression at
-    analysis time (withColumn analyzes eagerly), so execution uses
-    UTC - offset-free, DST-free, total - no matter what the session
-    tz is by then."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return df.withColumn(colname, F.col(colname).cast("timestamp"))
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
+    local-time mapping is not total there). Instead the wall-clock
+    fields are read off the naive value (all zone-free on NTZ) and
+    rebuilt as epoch micros, so no session conf is read or written and
+    concurrent callers cannot see each other's zone. Interval
+    arithmetic such as ``epoch + (ts - epoch_ntz)`` is NOT zone-free:
+    day intervals are added in the session tz (1 h off in summer)."""
+    c = F.col(colname)
+    micros = (
+        F.unix_date(F.to_date(c)).cast("long") * 86_400_000_000
+        + F.hour(c).cast("long") * 3_600_000_000
+        + F.minute(c).cast("long") * 60_000_000
+        + (F.date_part(F.lit("SECOND"), c) * 1_000_000).cast("long")
+    )
+    return df.withColumn(colname, F.timestamp_micros(micros))
 
 
 def register_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -4,7 +4,7 @@ operators/codecs.py).
 
 SURVEY §2.4 names the production shape: "on a lakehouse table the
 snapshot rewrites become transactional MERGEs". The plain-parquet
-paths (streaming.stream._atomic_overwrite / run_upsert_snapshot,
+paths (streaming.stream._commit / run_upsert_snapshot,
 ImpressionStore's content-addressed deposits) stay the default and are
 fully exercised in CI; when ``delta-spark`` IS importable these
 helpers provide the real thing:

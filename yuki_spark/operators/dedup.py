@@ -128,14 +128,7 @@ def jaccard_pairs(docs: DataFrame, threshold: float) -> DataFrame:
 def jaccard_candidates(ts: DataFrame, threshold: float) -> DataFrame:
     """Prefix-filtered candidate pairs (doc_a < doc_b) from a
     token_sets table — every pair with Jaccard ≥ threshold is included
-    (no false negatives); callers verify on the full sets.
-
-    Preconditions (what :func:`token_sets` produces): one row per
-    doc_id, and ``toks`` holds DISTINCT tokens with
-    ``set_size == size(toks)``. The output is one row per candidate
-    pair only because of them: the first-shared-token emission below
-    is the only deduplication, and a repeated token (or a repeated
-    doc row) can emit its pair more than once."""
+    (no false negatives); callers verify on the full sets."""
     posts = ts.select("doc_id", "set_size", F.explode("toks").alias("tok"))
     df_tbl = posts.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     # canonical rarest-first order; floor() (not ceil) keeps the prefix
@@ -150,27 +143,14 @@ def jaccard_candidates(ts: DataFrame, threshold: float) -> DataFrame:
         .select(
             "doc_id",
             "set_size",
-            # the doc's whole prefix, ordered by the global rarest-first
-            # rank — carried on every posting row so the join can emit
-            # each pair at its FIRST shared prefix token only (below);
-            # prefixes are short (|d| − ⌈t·|d|⌉ + 1 tokens), so the
-            # payload is a few dozen strings per posting row
-            F.slice(
-                F.transform("ranked", lambda s: s["tok"]), F.lit(1), prefix_len
-            ).alias("pre_toks"),
-        )
-        .select(
-            "doc_id",
-            "set_size",
-            "pre_toks",
             # pos = the token's 1-based rank in the GLOBAL rarest-first
             # order (prefix tokens are exactly the first L ranked ones),
             # feeding PPJoin's positional filter below
-            F.posexplode("pre_toks").alias("pos0", "tok"),
+            F.posexplode(
+                F.slice(F.transform("ranked", lambda s: s["tok"]), F.lit(1), prefix_len)
+            ).alias("pos0", "tok"),
         )
-        .select(
-            "doc_id", "set_size", "pre_toks", (F.col("pos0") + 1).alias("pos"), "tok"
-        )
+        .select("doc_id", "set_size", (F.col("pos0") + 1).alias("pos"), "tok")
     )
     # Asymmetric INDEXING prefix (PPJoin, Xiao et al. '08): for a true
     # pair J ≥ t with |y| ≤ |x|, the required overlap
@@ -198,14 +178,12 @@ def jaccard_candidates(ts: DataFrame, threshold: float) -> DataFrame:
         F.col("doc_id").alias("doc_a"),
         F.col("set_size").alias("size_a"),
         F.col("pos").alias("pos_a"),
-        F.col("pre_toks").alias("pre_a"),
     )
     b = pre.where(F.col("pos") <= short_len).select(
         F.col("tok"),
         F.col("doc_id").alias("doc_b"),
         F.col("set_size").alias("size_b"),
         F.col("pos").alias("pos_b"),
-        F.slice("pre_toks", F.lit(1), short_len).alias("pre_b"),
     )
     # length filter: J ≥ t forces t·|a| ≤ |b| and t·|b| ≤ |a|.
     # Positional filter (PPJoin, Xiao et al. '08): both docs rank
@@ -238,30 +216,6 @@ def jaccard_candidates(ts: DataFrame, threshold: float) -> DataFrame:
         (F.col("size_b") == F.col("size_a"))
         & (F.col("doc_b") < F.col("doc_a"))
     )
-    # FIRST-SHARED-TOKEN emission (guide §2.3 — shuffle fewer bytes by
-    # not emitting duplicates at all): a pair sharing k prefix tokens
-    # used to emit k join rows collapsed by a distinct — the exchange
-    # and hash-agg over the raw join output were the candidate pass's
-    # dominant shuffle (measured sf0.1, t=0.8: 3.8M distinct pairs
-    # from a far larger raw join output). Both prefixes are ordered by
-    # the ONE global rarest-first rank, so the pair's matches arrive
-    # in the same relative order on both sides; this row is the
-    # pair's FIRST match iff no shared token precedes it in BOTH
-    # prefixes — an order-independent emptiness test on the two
-    # before-slices (size of array_intersect == 0; set semantics, no
-    # reliance on intersect output order). Exactly one row per
-    # candidate pair survives, so the distinct disappears. The
-    # dropped rows never reach an exchange — the filter runs inside
-    # the join stage.
-    first_match = (
-        F.size(
-            F.array_intersect(
-                F.slice(F.col("pre_a"), F.lit(1), F.col("pos_a") - 1),
-                F.slice(F.col("pre_b"), F.lit(1), F.col("pos_b") - 1),
-            )
-        )
-        == 0
-    )
     return (
         a.join(b, "tok")
         .where(
@@ -269,12 +223,12 @@ def jaccard_candidates(ts: DataFrame, threshold: float) -> DataFrame:
             & (F.col("size_b").cast("double") >= F.lit(threshold) * F.col("size_a"))
             & (F.col("size_a").cast("double") >= F.lit(threshold) * F.col("size_b"))
             & (ubound >= alpha)
-            & first_match
         )
         .select(
             F.least("doc_a", "doc_b").alias("doc_a"),
             F.greatest("doc_a", "doc_b").alias("doc_b"),
         )
+        .distinct()
     )
 
 
@@ -556,45 +510,8 @@ def minhash_pairs_from(
     moderately-similar band collision and verifying only size-
     compatible ones (measured at sf0.1, t=0.95: 9.6M → 2.2M
     candidates); it never drops a true pair, so LSH recall — and the
-    exact-Jaccard oracle — are untouched.
-
-    Preconditions (what :func:`token_sets` and :func:`band_index`
-    produce): ``ts`` has one row per doc_id, and ``bands`` has EXACTLY
-    one row per (doc_id, band) with all ``N_BANDS`` bands present for
-    every doc. The output is one row per candidate pair only because
-    of them: the least-band emission below is the only deduplication,
-    and it reads band i's predecessors as the first i entries of the
-    doc's band-ordered key vector, so a missing or repeated band row
-    misaligns that test (duplicate or lost candidates)."""
-    # LEAST-BAND emission (guide §2.3 — don't emit duplicates at all):
-    # a near-dup pair collides in most of its 16 bands, so the band
-    # self-join used to emit one row per shared band and collapse them
-    # with a distinct (measured sf0.1, t=0.95: 6.5M raw join rows →
-    # 1.2M distinct pairs — a 5.3× duplicate factor through the
-    # exchange+hash-agg). Each doc's full band-key vector (16 int64s,
-    # ordered by band) rides the join sides; a collision at band i is
-    # the pair's FIRST shared band iff no earlier band matched — an
-    # order-aligned elementwise test on the two before-slices. Exactly
-    # one row per pair survives, inside the join stage, so the
-    # distinct disappears; candidates and the verified output are
-    # unchanged (the emitted SET is identical).
-    barr = bands.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list(F.struct("band", "bkey"))).alias("bk")
-    ).select(
-        "doc_id", F.transform("bk", lambda s: s["bkey"]).alias("bkeys")
-    )
-    bx = (
-        bands.join(barr, "doc_id")
-        .join(ts.select("doc_id", "set_size"), "doc_id")
-    )
-    earlier_shared = F.exists(
-        F.zip_with(
-            F.slice(F.col("x.bkeys"), F.lit(1), F.col("band")),
-            F.slice(F.col("y.bkeys"), F.lit(1), F.col("band")),
-            lambda p, q: p == q,
-        ),
-        lambda v: v,
-    )
+    exact-Jaccard oracle — are untouched."""
+    bx = bands.join(ts.select("doc_id", "set_size"), "doc_id")
     cand = (
         bx.alias("x")
         .join(bx.alias("y"), ["band", "bkey"])
@@ -608,11 +525,11 @@ def minhash_pairs_from(
                 F.col("x.set_size").cast("double")
                 >= F.lit(threshold) * F.col("y.set_size")
             )
-            & ~earlier_shared
         )
         .select(
             F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
         )
+        .distinct()
     )
     return _verify_pairs(cand, ts, ts, threshold, "doc_a", "doc_b")
 

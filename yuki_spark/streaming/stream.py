@@ -62,8 +62,16 @@ def read_event_stream(
     disabled for streams at scale). ``max_files_per_trigger`` bounds
     micro-batch size — the file-source throttle; 1 forces
     one-file-per-batch replays (watermark advances between files)."""
+    return _file_stream(spark, path, EVENT_SCHEMA, max_files_per_trigger)
+
+
+def _file_stream(
+    spark: SparkSession, path: str, schema: StructType, max_files_per_trigger: int
+) -> DataFrame:
+    """Parquet file-source stream with an explicit schema — the one
+    reader behind every feed of this module."""
     return (
-        spark.readStream.schema(EVENT_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(path)
     )
@@ -316,7 +324,7 @@ def _fs_path(spark: SparkSession, path: str):
 
 
 def _heal_snapshot(spark: SparkSession, path: str) -> None:
-    """Recover a snapshot from an _atomic_overwrite crash window: a
+    """Recover a snapshot from a :func:`_swap` crash window: a
     surviving ``.old`` beside a missing live directory is renamed back
     (the crash hit mid-swap; the batch that was being committed is
     uncheckpointed and will replay), and a ``.old`` beside a live
@@ -340,7 +348,7 @@ def _read_snapshot_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     exists WITHOUT its ``_SUCCESS`` commit marker is a partial write
     from a crashed overwrite — fail loud rather than merge against a
     truncated snapshot and persist the loss. Interrupted
-    atomic-overwrite swaps are healed first (see _heal_snapshot)."""
+    :func:`_swap`s are healed first (see _heal_snapshot)."""
     _heal_snapshot(spark, path)
     fs, hpath = _fs_path(spark, path)
     if not fs.exists(hpath):
@@ -356,26 +364,24 @@ def _read_snapshot_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
-def _atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Overwrite a parquet snapshot crash-consistently: the rewrite
-    lands in a ``.staged`` sibling first (Spark's delete-then-write
-    overwrite is NOT atomic — a crash mid-write leaves a partial
-    directory), is verified committed via its ``_SUCCESS`` marker, and
-    swaps in via two renames. A crash at any point leaves either the
-    old snapshot intact (heal discards the stale stage) or the new one
-    complete; the only broken window — live renamed away, new not yet
-    renamed in — is healed by :func:`_heal_snapshot` on the next read.
-    Renames are single-FS metadata ops here; on an object store
-    without atomic rename this is where a lakehouse table's
-    transaction log takes over."""
+def _stage(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` to ``path``'s ``.staged`` sibling, verify its
+    ``_SUCCESS`` marker, and read the staged copy back with the schema
+    it was written from (no inference job)."""
     spark = df.sparkSession
     staged = path + ".staged"
     df.write.mode("overwrite").parquet(staged)
-    fs, live = _fs_path(spark, path)
-    _, st = _fs_path(spark, staged)
-    _, marker = _fs_path(spark, staged + "/_SUCCESS")
+    fs, marker = _fs_path(spark, staged + "/_SUCCESS")
     if not fs.exists(marker):
         raise RuntimeError(f"staged rewrite {staged!r} missing _SUCCESS marker")
+    return spark.read.schema(df.schema).parquet(staged)
+
+
+def _swap(spark: SparkSession, path: str) -> None:
+    """Rename ``path``'s staged copy into place through the ``.old``
+    sibling that :func:`_heal_snapshot` recovers."""
+    fs, live = _fs_path(spark, path)
+    _, st = _fs_path(spark, path + ".staged")
     _, old = _fs_path(spark, path + ".old")
     if fs.exists(old):
         fs.delete(old, True)
@@ -388,16 +394,69 @@ def _atomic_overwrite(df: DataFrame, path: str) -> None:
         fs.delete(old, True)
 
 
+def _commit(spark: SparkSession, snapshots, side=None) -> None:
+    """Commit one micro-batch's snapshots — the ONE crash-consistency
+    protocol of every snapshot loop in this module.
+
+    ``snapshots`` is the batch's ordered [(path, frame)], primary
+    first; ``side(*staged)`` (optional) derives further
+    [(path, frame)] from the staged copies of those frames (sidecar
+    and graph maintenance read the merged primary from there).
+
+    Phase 1 writes every frame to its path's ``.staged`` sibling (see
+    :func:`_stage`). Spark's delete-then-write overwrite is not
+    atomic, so nothing is ever written into a live directory; and
+    because no live file is touched in this phase, every frame may
+    keep reading the live snapshots through its lineage — no
+    checkpoint is needed to protect an overwrite. A crash here leaves
+    every live snapshot intact; the stale stage is overwritten by the
+    next commit of that path.
+
+    Phase 2 swaps the staged copies in, in the declared order, each by
+    two renames through ``.old`` (:func:`_swap`). The one broken
+    window of a swap — live renamed away, new not yet renamed in — is
+    healed by :func:`_heal_snapshot` on the next read. A crash between
+    two swaps leaves a prefix of the snapshots new and the rest one
+    batch stale. The batch is then uncommitted in the stream
+    checkpoint, so it replays, and every loop's batch function is
+    idempotent against its new primary (keyed upserts, anti-joins,
+    retract-then-re-add), so the replay rewrites exactly the state an
+    uninterrupted run leaves. Until then a stale derived snapshot only
+    names rows the primary no longer has (or lacks rows it has); the
+    loops' reads verify against the primary. The primary itself
+    cannot be derived back, which is why it swaps first.
+
+    Renames are single-FS metadata ops here; on an object store
+    without atomic rename this is where a lakehouse table's
+    transaction log takes over."""
+    snapshots = list(snapshots)
+    staged = [_stage(df, path) for path, df in snapshots]
+    if side is not None:
+        extra = list(side(*staged))
+        for path, df in extra:
+            _stage(df, path)
+        snapshots += extra
+    for path, _ in snapshots:
+        _swap(spark, path)
+
+
+def _start(sdf: DataFrame, apply_batch, checkpoint: str):
+    """Run ``apply_batch`` over every available micro-batch of ``sdf``
+    with its offsets and commits in ``checkpoint``."""
+    return (
+        sdf.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def read_document_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
     """File-source stream on the documents schema — the ingest feed
     for :func:`run_corpus_ingest`."""
-    return (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(path)
-    )
+    return _file_stream(spark, path, DOCUMENT_SCHEMA, max_files_per_trigger)
 
 
 def _run_dedup_ingest(
@@ -416,8 +475,7 @@ def _run_dedup_ingest(
 ):
     """Shared foreachBatch skeleton of the two continuous-ingest
     loops (documents :func:`run_corpus_ingest`, embeddings
-    :func:`run_embedding_ingest`) — ONE copy of the fragile
-    snapshot/merge/overwrite crash-consistency protocol:
+    :func:`run_embedding_ingest`):
 
     - ``prepare(batch)`` -> (canonicalized batch, its index rows,
       extra) — within-batch dedup included; all three eagerly
@@ -426,23 +484,16 @@ def _run_dedup_ingest(
       DataFrame[key] of batch keys duplicating ingested content
       (self-matches of a replayed batch already excluded).
     - ``rebuild_index(primary)`` — the index is DERIVED data: a crash
-      between the two overwrites is healed by re-deriving it.
+      between the two swaps is healed by re-deriving it.
     - ``maintain(spark, novel, merged_primary)`` (optional) ->
-      [(path, DataFrame)] of derived side-deposits to overwrite after
-      the primary/index swap (e.g. kNN graph-ladder maintenance);
-      each frame must already be eagerly checkpointed. Crash before a
-      side overwrite leaves that deposit stale against the new
-      primary — healed when the interrupted batch replays (every
-      maintainer is idempotent by contract).
+      [(path, DataFrame)] of derived side-deposits committed after
+      the primary and index (e.g. kNN graph-ladder maintenance);
+      ``merged_primary`` is the staged copy (see :func:`_commit`).
 
     A missing PRIMARY while the index exists fails loud (primary data
     cannot be derived back; plain parquet has no transaction log — a
-    lakehouse table makes the window atomic). Both merged snapshots
-    are materialized BEFORE either overwrite (the index lineage
-    reaches through the dup check into the current primary files the
-    overwrite deletes), and each overwrite goes through the
-    staged-rename swap so a crash mid-write can never leave a partial
-    directory that later reads as a truncated snapshot."""
+    lakehouse table makes the window atomic). Crash consistency:
+    :func:`_commit`."""
     from ..operators.merge import merge_upsert
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
@@ -471,20 +522,13 @@ def _run_dedup_ingest(
             novel = batch
             merged_primary = novel
             merged_index = index_rows
-        mp = merged_primary.localCheckpoint(eager=True)
-        mi = merged_index.localCheckpoint(eager=True)
-        side = maintain(spark, novel, mp) if maintain is not None else []
-        _atomic_overwrite(mp, primary_path)
-        _atomic_overwrite(mi, index_path)
-        for spath, sdf_ in side:
-            _atomic_overwrite(sdf_, spath)
+        _commit(
+            spark,
+            [(primary_path, merged_primary), (index_path, merged_index)],
+            side=None if maintain is None else lambda mp, _mi: maintain(spark, novel, mp),
+        )
 
-    return (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(sdf, apply_batch, checkpoint)
 
 
 def _dhash_rows(docs: DataFrame) -> DataFrame:
@@ -588,8 +632,8 @@ def run_corpus_ingest(
     join, never a corpus re-dedup), and (3) MERGEs the novel docs
     into the corpus snapshot and their band rows into the index
     snapshot, both doc-keyed upserts so a replayed batch rewrites the
-    identical state (idempotent sink; crash-consistency protocol in
-    :func:`_run_dedup_ingest`).
+    identical state (idempotent sink; crash consistency:
+    :func:`_commit`).
 
     With ``dhash_path`` / ``audio_path`` set, the d50 perceptual-hash
     and d55 audio-fingerprint deposits are maintained as SIDE
@@ -660,7 +704,7 @@ def run_corpus_ingest(
                 merged_corpus,
                 fn,
             )
-            side.append((path, rows.localCheckpoint(eager=True)))
+            side.append((path, rows))
         return side
 
     return _run_dedup_ingest(
@@ -678,26 +722,60 @@ def run_corpus_ingest(
     )
 
 
-def _read_id_stream(
-    spark: SparkSession, path: str, id_col: str, max_files_per_trigger: int
-) -> DataFrame:
-    """File-source stream of single-id retraction requests — the one
-    reader behind both takedown feeds (doc_id / vec_id)."""
-    return (
-        spark.readStream.schema(
-            StructType([StructField(id_col, LongType())])
-        )
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(path)
-    )
-
-
 def read_retraction_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
     """File-source stream of doc_id retraction requests — the takedown
     feed for :func:`run_corpus_retract` / :func:`run_corpus_label_retract`."""
-    return _read_id_stream(spark, path, "doc_id", max_files_per_trigger)
+    schema = StructType([StructField("doc_id", LongType())])
+    return _file_stream(spark, path, schema, max_files_per_trigger)
+
+
+def _run_retract(
+    sdf: DataFrame,
+    primary_path: str,
+    index_path: str,
+    checkpoint: str,
+    *,
+    key: str,
+    rebuild_index,
+    remove_from_index,
+    maintain,
+):
+    """Shared foreachBatch skeleton of the three retraction loops
+    (:func:`run_corpus_retract`, :func:`run_corpus_label_retract`,
+    :func:`run_embedding_retract`): dedupe the batch's ``key`` ids,
+    read the primary (none yet → nothing to retract), read the index
+    or re-derive it with ``rebuild_index(primary)``, anti-join the ids
+    out of the primary and ``remove_from_index(index, ids)``, then
+    commit both plus whatever ``maintain(ids, primary,
+    merged_primary)`` returns as [(path, DataFrame)] side snapshots
+    (``merged_primary`` is the staged copy). Every step is
+    an anti-join or a repair of exactly the touched rows, so a
+    replayed batch rewrites identical snapshots. Crash consistency:
+    :func:`_commit`."""
+
+    def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        ids = _dedup_per_key(batch_df.select(key), [key]).localCheckpoint(eager=True)
+        primary = _read_snapshot_or_none(spark, primary_path)
+        if primary is None:
+            return  # nothing ingested yet — retracting nothing
+        index = _read_snapshot_or_none(spark, index_path)
+        if index is None:
+            index = rebuild_index(primary)  # the index is DERIVED data
+        _commit(
+            spark,
+            [
+                (primary_path, primary.join(ids, key, "left_anti")),
+                (index_path, remove_from_index(index, ids)),
+            ],
+            side=lambda mp, _mi: maintain(ids, primary, mp),
+        )
+
+    return _start(sdf, apply_batch, checkpoint)
 
 
 def run_corpus_retract(
@@ -720,16 +798,13 @@ def run_corpus_retract(
 
     Idempotent by construction: every step is an anti-join, so a
     replayed batch removes nothing new and rewrites identical
-    snapshots (no batch-id header needed). Crash consistency: corpus
-    is overwritten first (staged-rename swap, never partial); a crash
-    before the index overwrite leaves stale index rows for absent
-    docs, which are (a) harmless to reads — incremental_neardup's
-    exact verification joins the CORPUS, so a candidate without a
-    surviving doc produces no verified pair — and (b) healed when the
-    interrupted batch replays. A retraction arriving before anything
-    was ingested is a no-op. Batch-side label artifacts are the
-    consumer's job: operators/dedup.relabel_after_removal recomputes
-    CC labels for exactly the components that lost a member. With
+    snapshots (no batch-id header needed; crash consistency:
+    :func:`_commit` — stale index rows for absent docs are harmless
+    because incremental_neardup's exact verification joins the
+    CORPUS). A retraction arriving before anything was ingested is a
+    no-op. Batch-side label artifacts are the consumer's job:
+    operators/dedup.relabel_after_removal recomputes CC labels for
+    exactly the components that lost a member. With
     ``dhash_path`` / ``audio_path`` set, the d50 perceptual-hash and
     d55 audio-fingerprint sidecars are reconciled against the
     surviving corpus (r13; see :func:`run_corpus_ingest`).
@@ -741,27 +816,11 @@ def run_corpus_retract(
     table they become DELETE WHERE / MERGE."""
     from ..operators import dedup as dd
 
-    def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ids = _dedup_per_key(batch_df.select("doc_id"), ["doc_id"]).localCheckpoint(
-            eager=True
-        )
-        corpus = _read_snapshot_or_none(spark, corpus_path)
-        if corpus is None:
-            return  # nothing ingested yet — retracting nothing
-        index = _read_snapshot_or_none(spark, index_path)
-        if index is None:
-            # ingest's heal rule: the index is DERIVED data
-            index = dd.band_index(dd.token_sets(corpus))
-        mc = corpus.join(ids, "doc_id", "left_anti").localCheckpoint(eager=True)
-        mi = dd.remove_from_index(index, ids).localCheckpoint(eager=True)
+    def maintain(ids, _corpus, merged_corpus):
+        spark = ids.sparkSession
         side = []
         for path in (dhash_path, audio_path):
-            if path is None:
-                continue
-            dsnap = _read_snapshot_or_none(spark, path)
+            dsnap = None if path is None else _read_snapshot_or_none(spark, path)
             # sidecar rows are pure per-document functions: retract
             # RECONCILES by one keyed semi join against the surviving
             # corpus (r13 — the sidecar discipline on the d50/d55
@@ -771,23 +830,19 @@ def run_corpus_retract(
             # sidecar is nothing to maintain.
             if dsnap is not None:
                 side.append(
-                    (
-                        path,
-                        dsnap.join(
-                            mc.select("doc_id"), "doc_id", "left_semi"
-                        ).localCheckpoint(eager=True),
-                    )
+                    (path, dsnap.join(merged_corpus.select("doc_id"), "doc_id", "left_semi"))
                 )
-        _atomic_overwrite(mc, corpus_path)
-        _atomic_overwrite(mi, index_path)
-        for path, sdf_ in side:
-            _atomic_overwrite(sdf_, path)
+        return side
 
-    return (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_retract(
+        sdf,
+        corpus_path,
+        index_path,
+        checkpoint,
+        key="doc_id",
+        rebuild_index=lambda corpus: dd.band_index(dd.token_sets(corpus)),
+        remove_from_index=dd.remove_from_index,
+        maintain=maintain,
     )
 
 
@@ -836,9 +891,8 @@ def run_corpus_label_ingest(
     rebuilds from the corpus (one-time cost, loud in the plan, never
     silent divergence); a missing CORPUS while derived snapshots
     exist fails loud (primary data cannot be derived back — the
-    shared skeleton's rule). Crash consistency: the corpus is
-    overwritten first; stale derived rows heal when the interrupted
-    batch replays. Scale shape: everything per batch is batch-sized
+    shared skeleton's rule). Crash consistency: :func:`_commit`.
+    Scale shape: everything per batch is batch-sized
     (band joins, condensed CC) except the keyed upsert rewrites,
     which are the plain-parquet stand-in for lakehouse MERGEs."""
     from ..operators import dedup as dd
@@ -868,24 +922,17 @@ def run_corpus_label_ingest(
                         "to reinitialize the pair/label history from "
                         "one batch (primary data cannot be derived back)"
                     )
-            new_pairs = intra
-            mc, mi = batch, bands
-            mp = _dedup_per_key(new_pairs, ["doc_a", "doc_b"]).localCheckpoint(
+            new_pairs = _dedup_per_key(intra, ["doc_a", "doc_b"]).localCheckpoint(
                 eager=True
             )
-            ml = dd.dedup_clusters(mp).localCheckpoint(eager=True)
+            merged = [batch, bands, new_pairs, dd.dedup_clusters(new_pairs)]
         else:
             index = _read_snapshot_or_none(spark, index_path)
             if index is None:
                 index = dd.band_index(dd.token_sets(corpus))
-            pairs = _read_snapshot_or_none(spark, pairs_path)
-            if pairs is None:
-                pairs = dd.minhash_lsh_pairs(corpus, threshold).select(
-                    "doc_a", "doc_b", "jac"
-                )
-            labels = _read_snapshot_or_none(spark, labels_path)
-            if labels is None:
-                labels = dd.dedup_clusters(pairs.select("doc_a", "doc_b"))
+            pairs, labels = _read_pairs_and_labels(
+                spark, pairs_path, labels_path, corpus, threshold
+            )
             # UPDATED (or replayed) ids: retract their stale state
             # first — old band rows would cross-match other docs
             # against text being replaced, and old pairs would keep
@@ -899,7 +946,7 @@ def run_corpus_label_ingest(
             # the relabel reads the PRE-removal pair table; compute it
             # before shrinking pairs to the survivors
             labels = dd.relabel_after_removal(labels, pairs, upd)
-            pairs = dd.surviving_pairs(pairs, upd).localCheckpoint(eager=False)
+            pairs = dd.surviving_pairs(pairs, upd)
             cross = (
                 dd.incremental_neardup(
                     batch,
@@ -923,29 +970,17 @@ def run_corpus_label_ingest(
             new_pairs = _dedup_per_key(
                 intra.unionByName(cross), ["doc_a", "doc_b"]
             ).localCheckpoint(eager=True)
-            mc = merge_upsert(corpus, batch, ["doc_id"]).localCheckpoint(
-                eager=True
-            )
-            mi = merge_upsert(index, bands, ["doc_id", "band"]).localCheckpoint(
-                eager=True
-            )
-            mp = merge_upsert(
-                pairs, new_pairs, ["doc_a", "doc_b"]
-            ).localCheckpoint(eager=True)
-            ml = dd.relabel_after_addition(
-                labels, new_pairs.select("doc_a", "doc_b")
-            ).localCheckpoint(eager=True)
-        _atomic_overwrite(mc, corpus_path)
-        _atomic_overwrite(mi, index_path)
-        _atomic_overwrite(mp, pairs_path)
-        _atomic_overwrite(ml, labels_path)
+            merged = [
+                merge_upsert(corpus, batch, ["doc_id"]),
+                merge_upsert(index, bands, ["doc_id", "band"]),
+                merge_upsert(pairs, new_pairs, ["doc_a", "doc_b"]),
+                dd.relabel_after_addition(labels, new_pairs.select("doc_a", "doc_b")),
+            ]
+        _commit(
+            spark, zip((corpus_path, index_path, pairs_path, labels_path), merged)
+        )
 
-    return (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(sdf, apply_batch, checkpoint)
 
 
 def run_corpus_label_retract(
@@ -966,51 +1001,48 @@ def run_corpus_label_retract(
     from-scratch build over the survivors at every point of the
     interleaving (pinned in tests). Idempotent by construction
     (anti-joins + the relabel of an already-shrunk component is a
-    no-op); same heal and crash-consistency rules as the ingest
-    loop. ``threshold`` is only consulted on the pairs heal path and
-    must match the ingest loop's."""
+    no-op); same heal rules as the ingest loop, crash consistency:
+    :func:`_commit`. ``threshold`` is only consulted on the pairs heal
+    path and must match the ingest loop's."""
     from ..operators import dedup as dd
 
-    def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ids = _dedup_per_key(batch_df.select("doc_id"), ["doc_id"]).localCheckpoint(
-            eager=True
+    def maintain(ids, corpus, _merged_corpus):
+        pairs, labels = _read_pairs_and_labels(
+            ids.sparkSession, pairs_path, labels_path, corpus, threshold
         )
-        corpus = _read_snapshot_or_none(spark, corpus_path)
-        if corpus is None:
-            return  # nothing ingested yet — retracting nothing
-        index = _read_snapshot_or_none(spark, index_path)
-        if index is None:
-            index = dd.band_index(dd.token_sets(corpus))
-        pairs = _read_snapshot_or_none(spark, pairs_path)
-        if pairs is None:
-            pairs = dd.minhash_lsh_pairs(corpus, threshold).select(
-                "doc_a", "doc_b", "jac"
-            )
-        labels = _read_snapshot_or_none(spark, labels_path)
-        if labels is None:
-            labels = dd.dedup_clusters(pairs.select("doc_a", "doc_b"))
-        mc = corpus.join(ids, "doc_id", "left_anti").localCheckpoint(eager=True)
-        mi = dd.remove_from_index(index, ids).localCheckpoint(eager=True)
-        # relabel reads the PRE-removal pair table; compute both
-        # survivors and labels before any overwrite
-        ml = dd.relabel_after_removal(
-            labels, pairs.select("doc_a", "doc_b"), ids
-        ).localCheckpoint(eager=True)
-        mp = dd.surviving_pairs(pairs, ids).localCheckpoint(eager=True)
-        _atomic_overwrite(mc, corpus_path)
-        _atomic_overwrite(mi, index_path)
-        _atomic_overwrite(mp, pairs_path)
-        _atomic_overwrite(ml, labels_path)
+        # the relabel reads the PRE-removal pair table
+        return [
+            (pairs_path, dd.surviving_pairs(pairs, ids)),
+            (
+                labels_path,
+                dd.relabel_after_removal(labels, pairs.select("doc_a", "doc_b"), ids),
+            ),
+        ]
 
-    return (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_retract(
+        sdf,
+        corpus_path,
+        index_path,
+        checkpoint,
+        key="doc_id",
+        rebuild_index=lambda corpus: dd.band_index(dd.token_sets(corpus)),
+        remove_from_index=dd.remove_from_index,
+        maintain=maintain,
     )
+
+
+def _read_pairs_and_labels(spark, pairs_path, labels_path, corpus, threshold):
+    """The pair and label snapshots of the keep-all loops, each
+    re-derived from ``corpus`` when missing (DERIVED data)."""
+    from ..operators import dedup as dd
+
+    pairs = _read_snapshot_or_none(spark, pairs_path)
+    if pairs is None:
+        pairs = dd.minhash_lsh_pairs(corpus, threshold).select("doc_a", "doc_b", "jac")
+    labels = _read_snapshot_or_none(spark, labels_path)
+    if labels is None:
+        labels = dd.dedup_clusters(pairs.select("doc_a", "doc_b"))
+    return pairs, labels
 
 
 EMBEDDING_SCHEMA = StructType(
@@ -1027,11 +1059,7 @@ def read_embedding_stream(
 ) -> DataFrame:
     """File-source stream on the embeddings schema — the ingest feed
     for :func:`run_embedding_ingest`."""
-    return (
-        spark.readStream.schema(EMBEDDING_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(path)
-    )
+    return _file_stream(spark, path, EMBEDDING_SCHEMA, max_files_per_trigger)
 
 
 def run_embedding_ingest(
@@ -1064,15 +1092,14 @@ def run_embedding_ingest(
     exact neighborhood, existing vertices re-cut top-k from current
     edges ∪ batch scores. The retraction twin is
     run_embedding_retract's graph_paths. A serving loop therefore
-    never descends a ladder that predates the corpus. ``bits`` is FIXED for the index lifetime
-    (see similarity.nd_bucket_rows) — an adaptive width would shear
-    the index as the corpus grows. Scale notes: like the document
-    ingest,
-    the snapshot rewrite is the plain-parquet stand-in for a lakehouse
-    MERGE INTO; the bucket join costs O(batch × colliding rows)
-    regardless of corpus size, and the verification joins are keyed on
-    vec_id (SMJ-able at any scale). Crash-consistency protocol in
-    :func:`_run_dedup_ingest`."""
+    never descends a ladder that predates the corpus. ``bits`` is
+    FIXED for the index lifetime (see similarity.nd_bucket_rows) — an
+    adaptive width would shear the index as the corpus grows. Scale
+    notes: like the document ingest, the snapshot rewrite is the
+    plain-parquet stand-in for a lakehouse MERGE INTO; the bucket join
+    costs O(batch × colliding rows) regardless of corpus size, and the
+    verification joins are keyed on vec_id (SMJ-able at any scale).
+    Crash consistency: :func:`_commit`."""
     from ..operators import similarity as sim
 
     def prepare(batch_df: DataFrame):
@@ -1136,31 +1163,12 @@ def run_embedding_ingest(
     def maintain(spark, novel, merged_vectors):
         side = []
         nb_all = novel.select("vec_id", "embedding").localCheckpoint(eager=True)
-        for gspec in graph_paths or []:
-            # (path, k, mod) or (path, k, mod, repair): repair="lsh"
-            # routes the per-batch graph maintenance through the s11
-            # bucket machinery — the ground-level (mod=1) choice at
-            # scale, bounding per-batch scores independent of corpus
-            # size; the default "exact" keeps the maintained ≡
-            # rebuilt hash invariant the bounded demo grains pin
-            gpath, gk, gmod = gspec[:3]
-            grepair = gspec[3] if len(gspec) > 3 else "exact"
-            graph = _read_snapshot_or_none(spark, gpath)
-            if graph is None:
-                continue  # deposit not built yet — nothing to maintain
-            nb = (
-                nb_all
-                if gmod <= 1
-                else nb_all.where(F.col("vec_id") % gmod == 0)
-            )
+        for gpath, graph, gk, gmod, grepair in _graph_levels(spark, graph_paths):
+            nb = _level(nb_all, gmod)
             if nb.isEmpty():
                 continue  # no level members in this batch — the
                 # deposit is already exact over the unchanged level
-            mem = (
-                merged_vectors
-                if gmod <= 1
-                else merged_vectors.where(F.col("vec_id") % gmod == 0)
-            )
+            mem = _level(merged_vectors, gmod)
             # retract-then-ingest: a replayed or UPDATED vec_id is
             # already a graph vertex, and its stale edges describe an
             # embedding that may no longer exist — knn_graph_ingest's
@@ -1171,44 +1179,24 @@ def run_embedding_ingest(
             # retract a no-op (nothing removed, nobody touched).
             ids = nb.select("vec_id")
             mem_wo = mem.join(ids, "vec_id", "left_anti")
-            kw_r, kw_i = {}, {}
-            bucket_side = None
+            kw_r = kw_i = {}
+            buckets = []
             if grepair == "lsh":
-                # the bucket SIDECAR (gpath + "_buckets") removes the
-                # per-batch plane-dot scan: read/heal it, drop the
-                # batch ids (update case), append the batch bucketed
-                # at the sidecar's FROZEN width — a pure per-vector
-                # function, so maintained ≡ rebuilt at fixed width
-                bpath = gpath + "_buckets"
-                btbl, np_ = _lsh_bucket_sidecar(spark, bpath, mem_wo)
-                btbl_wo = btbl.join(ids, "vec_id", "left_anti").localCheckpoint(
-                    eager=True
-                )
-                newb = sim._sign_bucketed(nb, np_).select("vec_id", "bucket")
-                btbl_full = btbl_wo.unionByName(newb).localCheckpoint(
-                    eager=True
-                )
-                kw_r = dict(n_planes=np_, bucketed=btbl_wo)
+                # append the batch bucketed at the sidecar's FROZEN
+                # width — a pure per-vector function, so maintained ≡
+                # rebuilt at fixed width
+                btbl, np_ = _lsh_buckets(spark, gpath, mem_wo)
+                btbl_full = btbl.unionByName(
+                    sim._sign_bucketed(nb, np_).select("vec_id", "bucket")
+                ).localCheckpoint(eager=True)
+                kw_r = dict(n_planes=np_, bucketed=btbl)
                 kw_i = dict(n_planes=np_, bucketed=btbl_full)
-                bucket_side = (
-                    bpath,
-                    btbl_full.withColumn(
-                        "n_planes", F.lit(np_).cast("int")
-                    ).localCheckpoint(eager=True),
-                )
+                buckets = [_buckets_snapshot(gpath, btbl_full, np_)]
             g1 = sim.knn_graph_retract(
                 mem_wo, graph, ids, k=gk, members=mem_wo, repair=grepair, **kw_r
             )
-            side.append(
-                (
-                    gpath,
-                    sim.knn_graph_ingest(
-                        g1, nb, k=gk, members=mem, repair=grepair, **kw_i
-                    ).localCheckpoint(eager=True),
-                )
-            )
-            if bucket_side is not None:
-                side.append(bucket_side)
+            g2 = sim.knn_graph_ingest(g1, nb, k=gk, members=mem, repair=grepair, **kw_i)
+            side += [(gpath, g2), *buckets]
         return side
 
     return _run_dedup_ingest(
@@ -1224,6 +1212,42 @@ def run_embedding_ingest(
         primary_name="vectors",
         maintain=maintain if graph_paths else None,
     )
+
+
+def _graph_levels(spark: SparkSession, graph_paths):
+    """(path, graph, k, level_mod, repair) of every BUILT deposit in
+    ``graph_paths`` — specs are (path, k, mod) or (path, k, mod,
+    repair); a deposit not built yet has nothing to maintain.
+    repair="lsh" routes the per-batch graph maintenance through the
+    s11 bucket machinery — the ground-level (mod=1) choice at scale,
+    bounding per-batch scores independent of corpus size; the default
+    "exact" keeps the maintained ≡ rebuilt hash invariant the bounded
+    demo grains pin."""
+    for gspec in graph_paths or []:
+        gpath, gk, gmod = gspec[:3]
+        graph = _read_snapshot_or_none(spark, gpath)
+        if graph is not None:
+            yield gpath, graph, gk, gmod, gspec[3] if len(gspec) > 3 else "exact"
+
+
+def _level(vectors: DataFrame, mod: int) -> DataFrame:
+    """The members of a ladder level: vec_id % mod == 0 (all when mod ≤ 1)."""
+    return vectors if mod <= 1 else vectors.where(F.col("vec_id") % mod == 0)
+
+
+def _lsh_buckets(spark: SparkSession, gpath: str, pool: DataFrame):
+    """(bucket table, n_planes) of a repair="lsh" graph deposit: its
+    bucket SIDECAR (``gpath + "_buckets"``, which removes the
+    per-batch plane-dot scan) read or healed over ``pool`` — the level
+    members without the batch ids (see :func:`_lsh_bucket_sidecar`) —
+    and checkpointed: it feeds the repair and the sidecar rewrite."""
+    btbl, np_ = _lsh_bucket_sidecar(spark, gpath + "_buckets", pool)
+    return btbl.localCheckpoint(eager=True), np_
+
+
+def _buckets_snapshot(gpath: str, btbl: DataFrame, np_: int):
+    """(path, frame) rewrite of a graph deposit's bucket sidecar."""
+    return gpath + "_buckets", btbl.withColumn("n_planes", F.lit(np_).cast("int"))
 
 
 def _lsh_bucket_sidecar(
@@ -1278,7 +1302,8 @@ def read_vec_retraction_stream(
 ) -> DataFrame:
     """File-source stream of vec_id retraction requests — the takedown
     feed for :func:`run_embedding_retract`."""
-    return _read_id_stream(spark, path, "vec_id", max_files_per_trigger)
+    schema = StructType([StructField("vec_id", LongType())])
+    return _file_stream(spark, path, schema, max_files_per_trigger)
 
 
 def run_embedding_retract(
@@ -1316,12 +1341,10 @@ def run_embedding_retract(
     Idempotent by construction: every step is an anti-join (the graph
     repair re-ranks the same touched set to the same rows), so a
     replayed batch rewrites identical snapshots. Crash consistency:
-    vectors are overwritten first; a crash before the index/graph
-    overwrites leaves stale rows for absent vectors, which are
-    harmless to reads (the ingest loop's candidate pairs verify
-    against the VECTORS snapshot; a descent hop into a removed cid
-    re-ranks it against base, where it no longer exists) and are
-    healed when the interrupted batch replays.
+    :func:`_commit` — stale rows for absent vectors are harmless to
+    reads (the ingest loop's candidate pairs verify against the
+    VECTORS snapshot; a descent hop into a removed cid re-ranks it
+    against base, where it no longer exists).
 
     Single-writer ORDERING contract for shared ``graph_paths``
     deposits: the stale-rows-heal-on-replay guarantee holds only if
@@ -1349,69 +1372,33 @@ def run_embedding_retract(
     lakehouse DELETE WHERE / MERGE."""
     from ..operators import similarity as sim
 
-    def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        ids = _dedup_per_key(batch_df.select("vec_id"), ["vec_id"]).localCheckpoint(
-            eager=True
-        )
-        vectors = _read_snapshot_or_none(spark, vectors_path)
-        if vectors is None:
-            return  # nothing ingested yet — retracting nothing
-        index = _read_snapshot_or_none(spark, index_path)
-        if index is None:
-            # ingest's heal rule: the index is DERIVED data
-            index = sim.nd_bucket_rows(vectors, bits)
-        mv = vectors.join(ids, "vec_id", "left_anti").localCheckpoint(eager=True)
-        mi = index.join(ids, "vec_id", "left_anti").localCheckpoint(eager=True)
-        repaired: list[tuple[str, DataFrame]] = []
-        for gspec in graph_paths or []:
-            # (path, k, mod) or (path, k, mod, repair) — see the
-            # ingest loop's maintain hook for the repair-mode note
-            gpath, gk, gmod = gspec[:3]
-            grepair = gspec[3] if len(gspec) > 3 else "exact"
-            graph = _read_snapshot_or_none(spark, gpath)
-            if graph is None:
-                continue  # deposit not built yet — nothing to maintain
-            mem = mv if gmod <= 1 else mv.where(F.col("vec_id") % gmod == 0)
+    def maintain(ids, _vectors, merged_vectors):
+        spark = ids.sparkSession
+        side = []
+        for gpath, graph, gk, gmod, grepair in _graph_levels(spark, graph_paths):
+            mem = _level(merged_vectors, gmod)
             kw = {}
             if grepair == "lsh":
-                # bucket sidecar: heal from the POST-removal pool,
-                # else drop the retracted ids (pure anti-join —
-                # replay-idempotent) and repair against the deposit
-                bpath = gpath + "_buckets"
-                btbl, np_ = _lsh_bucket_sidecar(spark, bpath, mem)
-                btbl = btbl.join(ids, "vec_id", "left_anti").localCheckpoint(
-                    eager=True
-                )
+                # bucket sidecar healed from the POST-removal pool,
+                # which already lacks the retracted ids
+                btbl, np_ = _lsh_buckets(spark, gpath, mem)
                 kw = dict(n_planes=np_, bucketed=btbl)
-                repaired.append(
-                    (
-                        bpath,
-                        btbl.withColumn(
-                            "n_planes", F.lit(np_).cast("int")
-                        ).localCheckpoint(eager=True),
-                    )
-                )
-            repaired.append(
-                (
-                    gpath,
-                    sim.knn_graph_retract(
-                        mv, graph, ids, k=gk, members=mem, repair=grepair, **kw
-                    ).localCheckpoint(eager=True),
-                )
+                side.append(_buckets_snapshot(gpath, btbl, np_))
+            g = sim.knn_graph_retract(
+                merged_vectors, graph, ids, k=gk, members=mem, repair=grepair, **kw
             )
-        _atomic_overwrite(mv, vectors_path)
-        _atomic_overwrite(mi, index_path)
-        for gpath, g in repaired:
-            _atomic_overwrite(g, gpath)
+            side.append((gpath, g))
+        return side
 
-    return (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_retract(
+        sdf,
+        vectors_path,
+        index_path,
+        checkpoint,
+        key="vec_id",
+        rebuild_index=lambda vectors: sim.nd_bucket_rows(vectors, bits),
+        remove_from_index=lambda index, ids: index.join(ids, "vec_id", "left_anti"),
+        maintain=maintain,
     )
 
 
@@ -1501,9 +1488,6 @@ def run_upsert_snapshot(
     descending when given (e.g. an event timestamp — the true last
     writer), else by the non-key columns descending (deterministic
     across shuffles, unlike dropDuplicates)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     from ..operators.merge import merge_upsert
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
@@ -1511,19 +1495,9 @@ def run_upsert_snapshot(
         batch_df = _dedup_per_key(batch_df, keys, order_col)
         target = _read_snapshot_or_none(spark, snapshot_path)
         merged = batch_df if target is None else merge_upsert(target, batch_df, keys)
-        # rewrite through a staging df: collect to driver is avoided,
-        # localCheckpoint materializes before the overwrite clobbers
-        # the files being read; the overwrite itself is the staged
-        # rename swap (crash leaves old-complete or new-complete,
-        # never a partial directory)
-        _atomic_overwrite(merged.localCheckpoint(eager=True), snapshot_path)
+        _commit(spark, [(snapshot_path, merged)])
 
-    return (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(sdf, apply_batch, checkpoint)
 
 
 def run_ann_serving(
@@ -1558,7 +1532,7 @@ def run_ann_serving(
     (|top level| + levels·beam·k)) exact scores plus keyed joins
     against the n·k edge deposits — no per-batch corpus re-scan, and
     nothing corpus-sized is broadcast. The snapshot rewrite itself is
-    O(snapshot) per batch (staged-rename discipline); on a lakehouse
+    O(snapshot) per batch (see :func:`_commit`); on a lakehouse
     it becomes the run_upsert_delta MERGE shape."""
     from ..operators import similarity as sim
 
@@ -1566,36 +1540,17 @@ def run_ann_serving(
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = _dedup_per_key(batch_df, ["vec_id"]).localCheckpoint(
-            eager=True
-        )
+        batch = _dedup_per_key(batch_df, ["vec_id"]).localCheckpoint(eager=True)
         res = sim.hnsw_descent(
-            vectors,
-            graphs,
-            k=k,
-            beam=beam,
-            entry_mod=entry_mod,
-            queries=batch,
-            base=base,
+            vectors, graphs, k=k, beam=beam, entry_mod=entry_mod, queries=batch, base=base
         ).localCheckpoint(eager=True)
         target = _read_snapshot_or_none(spark, snapshot_path)
-        merged = (
-            res
-            if target is None
-            else target.join(
-                res.select("qid").distinct(), "qid", "left_anti"
-            ).unionByName(res)
-        )
-        _atomic_overwrite(
-            merged.localCheckpoint(eager=True), snapshot_path
-        )
+        if target is not None:
+            qids = res.select("qid").distinct()
+            res = target.join(qids, "qid", "left_anti").unionByName(res)
+        _commit(spark, [(snapshot_path, res)])
 
-    return (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(sdf, apply_batch, checkpoint)
 
 
 def run_sketch_accumulator(
@@ -1793,12 +1748,7 @@ def _run_state_accumulator(sdf: DataFrame, state_path: str, checkpoint: str, bui
             fh.write(merged or b"")
         os.replace(tmp, state_path)  # id + sketch move together
 
-    return (
-        sdf.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(sdf, apply_batch, checkpoint)
 
 
 def read_sketch_state(state_path: str) -> tuple[int, bytes]:
