@@ -1,13 +1,17 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship query (pricing summary) at sf0.001.
-``queries()`` — every implemented operator from SURVEY.md §2.
+``queries()`` — every implemented operator from SURVEY.md §2, in sweep
+order (see :func:`_sweep_order`).
 ``oracle_sql()`` — DuckDB twins for the driver's correctness gate.
 """
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -19,273 +23,50 @@ def entry(spark: SparkSession) -> DataFrame:
     return tpch.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-# Insertion order is gate order (the driver caps its sweep at 50 rows).
-# Round-14 rotation (staleness rule: no key's driver row older than 2
-# rounds — at r14 the valid stamps are r12/r13/r14, so the 50 keys
-# whose latest row is r11 hit the bound and must re-sweep). The
-# must-sweep set is the 4 r10-stamped keys displaced at r13 (driver
-# row r10 + two-scale prestamps recorded in the r13 _R14_PRESTAMP
-# note) + the 6 r13-born keys (zero CORRECTNESS rows — the hard
-# constraint) + 50 r11-stamped = 60 > 50. Per the r13 verdict and the
-# _R14_PRESTAMP note recorded at the r13 close, the displaced four
-# and the r13-born six open the sweep (oldest/zero evidence first),
-# 40 of the 50 r11-stamped keys fill the rest, and the LAST TEN
-# r11-stamped keys (stable sim-family tails, two-scale prestamp
-# evidence recorded at the r13 close: full sf0.01 parity sweep +
-# manual sf0.1 bit-exact compare) become r14's displaced handful.
-_PRIORITY = [
-    # --- slots 1..4: r10-stamped keys displaced at r13 (two-scale
-    # prestamp evidence from the r12 AND r13 closes; the r13 verdict
-    # orders them to open the r14 sweep)
-    "s2_label_centroids",
-    "s5_quantize_error",
-    "s6_ann_recall",
-    "s9_kmeans_refine",
-    # --- slots 5..10: born r13 AFTER that round's rotation locked —
-    # never driver-validated (judge-green in the full 160-key local
-    # parity sweep at the r13 close, sf0.01 + sf0.1 parity at birth)
-    "s31_pq_churn",
-    "d55_audio_fingerprint_dups",
-    "d56_trigram_lm_perplexity",
-    "s32_filtered_ann_auto",
-    "d57_bpe_train",
-    "d58_learned_bpe_budget",
-    # --- slots 11..14: r12/r13-stamped keys whose operators were
-    # TOUCHED in r14 (the README evidence-freshness rule: a commit
-    # touching an operator behind a key moves it to the sweep head):
-    # d54/d56 now read the LM family's per_doc3 deposit, d23/d18
-    # share their flag/pack cores with the curation stages, d17's
-    # twin builds from the shared trigram fragment. All four are
-    # hash-pinned unchanged locally (sf0.01 parity this round; d54
-    # also manually sf0.1), but the driver must re-stamp them.
-    "d54_perplexity_filter",
-    "d23_gopher_filter",
-    "d18_sequence_packing",
-    "d17_contamination",
-    # --- slots 15..50: the r11-stamped keys at the staleness bound,
-    # in the order the r13 close recorded (36 of 50; the displaced
-    # tail — ten from the r13 plan + four more displaced by the
-    # touched-key inserts above — sits below the cap with two-scale
-    # prestamp evidence)
-    "s25_int8_recall",
-    "d49_retraction_impact",
-    "s26_hnsw_adaptive",
-    "d50_image_phash_dups",
-    "d51_html_extract",
-    "s27_graph_churn",
-    "s28_filtered_ann",
-    "d25_domain_mix",
-    "d26_quality_buckets",
-    "d27_bloom_contamination",
-    "d29_dsir_weights",
-    "d31_token_surprisal",
-    "d32_doc_entropy",
-    "d33_split_leakage",
-    "d3_minhash_lsh_dups",
-    "d44_bpe_tokens",
-    "d46_tokenizer_fertility",
-    "d47_decontaminate_apply",
-    "distinct_users_daily",
-    "dq1_constraint_report",
-    "e12_heavy_hitters",
-    "e18_rolling_active_users",
-    "e19_gap_fill",
-    "e1_event_counts",
-    "e20_mad_outliers",
-    "e21_cusum_drift",
-    "e22_psi_drift",
-    "e23_seasonal_anomaly",
-    "e29_trending_events",
-    "e2_sessionization",
-    "e3_hourly_rollup",
-    "e4_user_asof_value",
-    "e5_funnel",
-    "e7_value_percentiles_approx",
-    "m1_multimodal_meta",
-    "m2_resize_framesample",
-    # --- 50-slot cap lands HERE: exactly 50 keys above (4 displaced
-    # r10 + 6 r13-born + 4 r14-touched + 36 r11-stamped). Below the
-    # cap: first the FOURTEEN displaced r11-stamped keys (driver row
-    # r11 + two-scale prestamps — they MUST open the r15 sweep), then
-    # keys born in r14, then the 50 r12-stamped keys (they hit the
-    # staleness bound at r15 and fill r15's remaining slots), then
-    # the r13-stamped keys freshest at the bottom.
-    # --- four r11-stamped keys displaced by the r14 touched-key
-    # inserts (the LAST four of the r13-recorded order; two-scale
-    # prestamp evidence recorded at the r14 close: full sf0.01 parity
-    # sweep + manual sf0.1 bit-exact compare):
-    "m3_audio_windows",
-    "p1_pii_scan",
-    "q23_skyline_parts",
-    "s11_knn_graph",
-    # --- displaced r11-stamped tail (per _R14_PRESTAMP recorded at
-    # the r13 close: full 160-key sf0.01 parity sweep + manual sf0.1
-    # bit-exact parity, both at the r13 close — two-scale fresh):
-    "s12_graph_recall",
-    "s13_matryoshka_recall",
-    "s18_nn_descent",
-    "s3_lsh_ann",
-    "s4_ivf_ann",
-    "s7_semdedup",
-    "s8_pq_ann",
-    "s19_ivfpq_ann",
-    "s20_pq_shortlist_sweep",
-    "d9_embedding_neardup",
-    # --- born in r14 go HERE as they land (zero driver rows;
-    # judge-green in the local parity gate; they MUST sweep in r15
-    # alongside the displaced ten):
-    # pl1 (r14-born): the composed curation-pipeline key. Its oracle
-    # embeds the all-pairs CC fragment, so it is a PAIR-FAMILY twin
-    # (sf0.01 by design, the d2/d3/d11/d20/d33 rule); birth evidence =
-    # sf0.01 oracle parity + the component stages' own two-scale
-    # parity (d51/d5/d23/d20/d47/d21/d18/d58 all driver-green) + the
-    # composed-equals-direct e2e pin in tests/test_pipeline_e2e.py.
-    "pl1_curation_pipeline",
-    # d59/d60 (r14-born): quality-classifier TRAIN (batch perceptron
-    # + Collins averaging, integer-exact) and the percentile-budget
-    # APPLY — the second train→apply loop after d57/d58. Birth
-    # evidence: sf0.01 AND sf0.1 oracle parity (recorded at the r14
-    # close) + the separable-corpus trainer reference test.
-    "d59_classifier_train",
-    "d60_learned_classifier_filter",
-    # m4 (r14-born): shot-boundary detection over the real container
-    # walk (d53's linear front half, no pair stage — the twin is
-    # likewise uncapped and two-scale). Birth evidence: sf0.01 AND
-    # sf0.1 oracle parity recorded at the r14 close.
-    "m4_video_scene_cuts",
-    # _R15_PRESTAMP (arithmetic finalized at the r14 close): r15's
-    # must-sweep set is the FOURTEEN displaced r11-stamped keys above
-    # + the FOUR r14-born keys (pl1_curation_pipeline,
-    # d59_classifier_train, d60_learned_classifier_filter,
-    # m4_video_scene_cuts — zero driver rows, the hard constraint) +
-    # the 49 r12-stamped keys below (50 minus d18_sequence_packing,
-    # which re-stamps in r14 via the touched-key head slots;
-    # d54/d23/d17 were r13-stamped and likewise re-stamp in r14)
-    # = 67 > 50. The displaced fourteen and the r14-born four take
-    # slots 1-18, 32 of the 49 r12-stamped keys fill the rest, and
-    # the overflow displaces the LAST SEVENTEEN r12-stamped keys in
-    # the order below (the stable TPC-H/window/set-ops tails:
-    # q4_order_priority, q5_local_supplier, q6_forecast_revenue,
-    # q7_volume_shipping, q8_market_share, q9_product_profit,
-    # rollup_revenue, semi_anti_parts, setops_customer_activity,
-    # setops_multiset_except, sql1_revenue_by_nation,
-    # union_dedup_keys, w1_top_customers_per_nation,
-    # w2_running_revenue, w3_moving_avg_events, w4_mom_growth,
-    # w5_rank_distribution), each displaced tail requiring fresh
-    # two-scale prestamp evidence (full sf0.01 parity sweep + manual
-    # sf0.1 compare) recorded at the r14 close.
-    # --- r12-stamped (hit the bound at r15; ordered so r15's
-    # displaced tail is the LAST ten):
-    "d52_bigram_lm_perplexity",
-    "cube_revenue",
-    "d28_token_zipf",
-    "d30_oov_rate",
-    "d45_langid_model",
-    "e10_value_histogram",
-    "e13_zscore_outliers",
-    "e14_ewma_daily",
-    "e15_retention_cohorts",
-    "e16_event_transitions",
-    "e17_session_window_stats",
-    "e6_value_percentiles",
-    "e8_error_window_stats",
-    "e9_json_props_stats",
-    "gsets_revenue",
-    "pivot_returnflag",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_priority_shipping",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_brand_counts",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunct_filter",
-    "q1_pricing_summary",
-    "q20_excess_shipments",
-    "q21_waiting_suppliers",
-    "q22_global_sales_opp",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "rollup_revenue",
-    "semi_anti_parts",
-    "setops_customer_activity",
-    "setops_multiset_except",
-    "sql1_revenue_by_nation",
-    "union_dedup_keys",
-    "w1_top_customers_per_nation",
-    "w2_running_revenue",
-    "w3_moving_avg_events",
-    "w4_mom_growth",
-    "w5_rank_distribution",
-    # --- r13-stamped (freshest driver rows — swept last)
-    "s29_filtered_graph_ann",
-    "s30_ivf_churn",
-    "d53_video_phash_dups",
-    "d10_winnow_fingerprint",
-    "d11_dedup_clusters",
-    "d12_subword_stats",
-    "d13_hash_sample",
-    "d14_stratified_sample",
-    "d15_profile",
-    "d16_repetition",
-    "d19_tfidf_top_terms",
-    "d1_exact_dedup",
-    "d20_dedup_apply",
-    "d21_corpus_split",
-    "d22_dup_spans",
-    "d24_weighted_sample",
-    "d2_ngram_jaccard_dups",
-    "d34_rag_chunking",
-    "d35_bigram_rarity",
-    "d36_cross_source_dups",
-    "d37_span_scrub",
-    "d38_threshold_sweep",
-    "d39_cluster_sizes",
-    "d40_classifier_filter",
-    "d41_mix_planner",
-    "d42_source_novelty",
-    "d43_shard_balance",
-    "d4_simhash_dups",
-    "d5_lang_id",
-    "d6_quality_score",
-    "d7_token_stats",
-    "d8_fingerprint",
-    "e24_common_paths",
-    "e25_interarrival",
-    "e26_funnel_latency",
-    "e27_ab_lift",
-    "e28_hll_users",
-    "s10_cluster_balance",
-    "s14_mmr_rerank",
-    "s15_label_drift",
-    "s16_knn_centrality",
-    "s17_ivf_probe_sweep",
-    "s1_cosine_topk",
-    "s21_nn_descent_converge",
-    "s22_hnsw_ann",
-    "s23_hnsw_beam_sweep",
-    "s24_hnsw_multilevel",
-]
+# Keys whose code changed after their last ledger row, each mapped to
+# the last round whose row predates the change. An entry heads the
+# sweep while the key's newest stamp is at most that round, so it
+# expires once a later sweep re-stamps the key; delete it then.
+_TOUCHED = {
+    # read dedup_family's rep_pairs08 / rep_lsh95 pair deposits, whose
+    # emission in operators/dedup.py was reverted after r15
+    "d2_ngram_jaccard_dups": 15,
+    "d3_minhash_lsh_dups": 15,
+    "d33_split_leakage": 15,
+    "d36_cross_source_dups": 15,
+    "d38_threshold_sweep": 15,
+    # read the rep_clusters08 deposit: CC labels over those pairs
+    "d11_dedup_clusters": 15,
+    "d20_dedup_apply": 15,
+    "d39_cluster_sizes": 15,
+    "d49_retraction_impact": 15,
+}
+
+
+def _sweep_order(keys: list[str]) -> list[str]:
+    """``keys`` in correctness-sweep order (a round checks the first
+    50), derived from the ``CORRECTNESS_r*.json`` ledger beside this
+    file: live ``_TOUCHED`` keys, then keys never stamped (in ``keys``
+    order), then the rest by oldest last stamp, a round's keys in that
+    round's file order."""
+    stamp: dict[str, tuple[int, int]] = {}
+    for path in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            for pos, key in enumerate(json.loads(path.read_text())):
+                stamp[key] = max(stamp.get(key, (0, 0)), (int(m.group(1)), pos))
+    head = [
+        k for k, r in _TOUCHED.items() if k in keys and stamp.get(k, (0, 0))[0] <= r
+    ]
+    rest = [k for k in keys if k not in head]
+    return head + sorted(rest, key=lambda k: stamp.get(k, (0, 0)))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    merged.update(tpch.QUERIES)
-    merged.update(events.QUERIES)
-    merged.update(docs.QUERIES)
-    merged.update(sim.QUERIES)
-    merged.update(curation.QUERIES)
-    out = {k: merged[k] for k in _PRIORITY if k in merged}
-    out.update(merged)
-    return out
+    for mod in (tpch, events, docs, sim, curation):
+        merged.update(mod.QUERIES)
+    return {k: merged[k] for k in _sweep_order(list(merged))}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -1,6 +1,8 @@
 """Orchestration-layer tests (SURVEY §2.1 — Yuki parity)."""
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -122,6 +124,30 @@ def test_impression_watermark_and_meta(spark, tmp_path):
     assert m["tags"]["quality"] == "gold"
     assert store.read(spark, imp).count() == 10
     assert imp in store.list_ids()
+
+
+def test_impression_watermark_failure_keeps_previous_meta(spark, tmp_path, monkeypatch):
+    """meta.json is replaced atomically: a watermark whose serialization
+    raises leaves the previous meta readable, the impression deposited,
+    and no temp file beside it."""
+    import json
+
+    store = ImpressionStore(str(tmp_path / "imps"))
+    imp = impression_id("t", "1", [])
+    store.write(imp, spark.range(3))
+    store.watermark(imp, "quality", "gold")
+    before = store.meta(imp)
+
+    def boom(*a, **k):
+        raise RuntimeError("injected meta failure")
+
+    monkeypatch.setattr(json, "dump", boom)
+    with pytest.raises(RuntimeError, match="injected meta failure"):
+        store.watermark(imp, "quality", "silver")
+    monkeypatch.undo()
+    assert store.exists(imp)
+    assert store.meta(imp) == before
+    assert sorted(os.listdir(tmp_path / "imps" / imp)) == ["data.parquet", "meta.json"]
 
 
 def test_impression_preview(spark, tmp_path):

@@ -6,6 +6,8 @@ Correctness says the numbers match; these tests say the *plan* would
 survive a 1000-executor scale-up."""
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,34 @@ def fmt_plan(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+@contextmanager
+def session_profile(spark, conf: dict[str, str]):
+    """Apply a conf profile to a live session for the duration of a
+    block, restoring every key afterwards (unset keys are restored by
+    unsetting — same discipline as the backends' per-task conf)."""
+    prev: dict[str, str | None] = {}
+    try:
+        # application runs INSIDE the try: if a mid-loop set raises
+        # (e.g. a static conf), the keys applied so far are restored
+        # by the finally instead of leaking onto the live session
+        for k, v in conf.items():
+            try:
+                prev[k] = spark.conf.get(k)
+            except Exception:  # noqa: BLE001 — key unset in this session
+                prev[k] = None
+            spark.conf.set(k, v)
+        yield spark
+    finally:
+        for k, old in prev.items():
+            try:
+                if old is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, old)
+            except Exception:  # noqa: BLE001 — static conf: restore the
+                pass  # rest; never mask the body's exception
 
 
 @pytest.fixture(scope="module")
@@ -300,7 +330,7 @@ def test_cluster_profile_fact_joins_degrade_to_smj(spark, qs):
     corpus-sized pair/cluster table) and assert the doc_id equi-joins
     pick SMJ — not a broadcast of a corpus-sized side, and never a
     cartesian."""
-    from yuki_spark.session import cluster_profile, session_profile
+    from yuki_spark.session import cluster_profile
 
     prof = cluster_profile()
     # sanity on the shipped profile itself
@@ -436,7 +466,6 @@ def test_checkpoint_blind_spot_joins_pinned_pre_checkpoint(spark):
     from yuki_spark.catalog import load
     from yuki_spark.operators import similarity, text
     from yuki_spark.queries import docs as docs_mod
-    from yuki_spark.session import session_profile
 
     def bnlj_nodes(plan: str) -> int:
         # formatted explain names each node twice (tree + detail);

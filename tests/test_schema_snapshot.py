@@ -13,8 +13,10 @@ the bottom of this file and commit the diff alongside the change.
 """
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 
 import pytest
 
@@ -33,12 +35,53 @@ def test_snapshot_covers_exactly_the_query_surface():
     assert set(SNAPSHOT) == set(QUERIES)
 
 
-def test_every_key_has_an_oracle_and_a_priority_slot():
-    """Driver-contract invariants: every key oracle-gated, every key
-    ranked (the rotation list and the registry can never drift)."""
+def test_every_key_has_an_oracle():
+    """Every key is oracle-gated."""
     oracles = entrymod.oracle_sql()
     assert set(QUERIES) <= set(oracles)
-    assert set(entrymod._PRIORITY) == set(QUERIES)
+
+
+def test_sweep_order_follows_the_correctness_ledger():
+    """queries() comes out in correctness-sweep order: the live
+    touched-key head, then keys with no ledger row, then the rest by
+    oldest last stamp — so the capped 50-key sweep always reaches the
+    least recently validated keys."""
+    from yuki_spark.queries import curation, docs, events, sim, tpch
+
+    registry = [
+        k for m in (tpch, events, docs, sim, curation) for k in m.QUERIES
+    ]
+    order = list(QUERIES)
+    assert sorted(order) == sorted(registry) and len(set(order)) == len(order)
+
+    last: dict[str, int] = {}
+    root = os.path.dirname(os.path.abspath(entrymod.__file__))
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for key in json.load(fh):
+                last[key] = max(last.get(key, 0), rnd)
+    live = [
+        k
+        for k, r in entrymod._TOUCHED.items()
+        if k in registry and last.get(k, 0) <= r
+    ]
+    assert order[: len(live)] == live
+    rounds = [last.get(k, 0) for k in order[len(live):]]
+    assert rounds == sorted(rounds)
+
+    # at the committed ledger: the four keys with no ledger row and
+    # the fourteen whose newest row is r11 all fall inside the cap
+    first50 = set(order[:50])
+    never = {k for k in registry if k not in last}
+    assert {
+        "pl1_curation_pipeline",
+        "d59_classifier_train",
+        "d60_learned_classifier_filter",
+        "m4_video_scene_cuts",
+    } <= never <= first50
+    r11 = {k for k in registry if last.get(k) == 11}
+    assert len(r11) == 14 and r11 <= first50
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

@@ -1122,8 +1122,8 @@ def test_commit_failed_stage_leaves_live_snapshots_untouched(spark, tmp_path, wh
     """Phase 1 of _commit writes only ``.staged`` siblings: when a
     frame's staged write raises — a declared snapshot after one that
     staged fine, or a side snapshot derived from the staged copies —
-    every live snapshot of the batch stays byte-identical and no
-    ``.old`` is left behind."""
+    every live snapshot of the batch stays byte-identical, and no
+    ``.old`` or ``.staged`` sibling is left behind."""
     paths = [str(tmp_path / n) for n in ("primary", "index", "side")]
     st._commit(spark, [(p, spark.range(5).selectExpr("id AS k")) for p in paths])
     before = {p: _dir_bytes(p) for p in paths}
@@ -1142,6 +1142,7 @@ def test_commit_failed_stage_leaves_live_snapshots_untouched(spark, tmp_path, wh
         st._commit(spark, snaps, side=side)
     assert {p: _dir_bytes(p) for p in paths} == before
     assert not any(os.path.exists(p + ".old") for p in paths)
+    assert not any(os.path.exists(p + ".staged") for p in paths)
 
 
 def test_commit_crash_after_first_swap_converges_on_replay(spark, tmp_path, monkeypatch):

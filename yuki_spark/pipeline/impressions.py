@@ -57,6 +57,21 @@ def impression_id(
 _TMP_PREFIX = ".tmp-"  # in-flight writes: never an impression id
 
 
+def _write_meta(imp_dir: str, doc: dict[str, Any]) -> None:
+    """Replace ``imp_dir``/meta.json with ``doc`` atomically: a reader
+    sees the old meta or the new one, never a truncated file."""
+    path = os.path.join(imp_dir, "meta.json")
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(doc, f, indent=2)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
 class ImpressionStore:
     def __init__(self, root: str):
         self.root = root
@@ -142,8 +157,7 @@ class ImpressionStore:
                 "tags": {},
                 **(meta or {}),
             }
-            with open(os.path.join(tmp, "meta.json"), "w") as f:
-                json.dump(doc, f, indent=2)
+            _write_meta(tmp, doc)
             self._publish(tmp, imp_id)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -327,8 +341,7 @@ class ImpressionStore:
         """Tag an impression (Yuki watermark analogue)."""
         m = self.meta(imp_id)
         m.setdefault("tags", {})[key] = value
-        with open(os.path.join(self._dir(imp_id), "meta.json"), "w") as f:
-            json.dump(m, f, indent=2)
+        _write_meta(self._dir(imp_id), m)
 
     def list_ids(self) -> list[str]:
         # an in-flight write's temp directory holds meta.json before
@@ -499,8 +512,7 @@ class ImpressionStore:
             inv = self._inventory(self._dir(imp_id))
             inv.pop("unreadable")
             meta["integrity"] = inv
-            with open(os.path.join(self._dir(imp_id), "meta.json"), "w") as f:
-                json.dump(meta, f, indent=2)
+            _write_meta(self._dir(imp_id), meta)
             return {
                 **stats,
                 "files_after": len(self.data_files(imp_id)),
@@ -635,8 +647,7 @@ class ImpressionStore:
             "pipeline": pipe.name,
             "deps": dep_ids,
         }
-        with open(os.path.join(self._dir(imp_id), "meta.json"), "w") as f:
-            json.dump(doc, f, indent=2)
+        _write_meta(self._dir(imp_id), doc)
         return imp_id
 
     def manifest(self, imp_id: str) -> dict[str, Any]:

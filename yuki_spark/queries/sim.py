@@ -290,28 +290,12 @@ def s20_pq_shortlist_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the production budget shares s19's deposit) joined against the
     deposited exact truth on (qid, cid) — tiny joins; index builds
     happen at most once per corpus via the store."""
-    from pyspark.sql import functions as F
-
     exact = _exact20(spark, sf_dir).select("qid", "cid")
-    possible = ANN_NQ * K
-    curve: DataFrame | None = None
-    for sl in PQ_SL_SWEEP:
-        row = (
-            _ivfpq_sl(spark, sf_dir, sl)
-            .select("qid", "cid")
-            .join(exact, ["qid", "cid"])
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-            .select(F.lit(sl).cast("bigint").alias("shortlist"), "n_hits")
-        )
-        curve = row if curve is None else curve.unionByName(row)
-    return curve.select(
+    return _recall_curve(
+        exact,
         "shortlist",
-        "n_hits",
-        F.lit(possible).cast("bigint").alias("n_possible"),
-        (F.col("n_hits").cast("double") / F.lit(float(possible))).alias(
-            "recall"
-        ),
-    ).orderBy("shortlist")
+        [(sl, _ivfpq_sl(spark, sf_dir, sl)) for sl in PQ_SL_SWEEP],
+    )
 
 
 def s9_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,10 +409,6 @@ def s6_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shared lazy checkpoint to first-touch-race."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import functions as F
-
-    nq = ANN_NQ
-    possible = nq * K
     with ThreadPoolExecutor(max_workers=4) as ex:
         futs = {
             name: ex.submit(fn, spark, sf_dir)
@@ -441,26 +421,36 @@ def s6_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         got = {name: f.result() for name, f in futs.items()}
     exact = got["exact"].select("qid", "cid")
+    return _recall_curve(
+        exact, "index", [(name, got[name]) for name in ("ivf", "lsh", "pq")]
+    )
 
-    def one(name: str, approx: DataFrame) -> DataFrame:
-        return (
+
+def _recall_curve(exact: DataFrame, label: str, points) -> DataFrame:
+    """One recall row per operating point: for each ``(value, approx)``
+    in ``points``, the hits of ``approx``'s (qid, cid) rows against the
+    exact top-K, labelled ``label`` = value (a bigint for a numeric
+    knob), then the cohort's n_possible = ANN_NQ·K and recall, ordered
+    by the label — s6's per-index table and the s17/s20/s23 sweeps."""
+    possible = ANN_NQ * K
+    curve: DataFrame | None = None
+    for value, approx in points:
+        lit = F.lit(value)
+        if not isinstance(value, str):
+            lit = lit.cast("bigint")
+        row = (
             approx.select("qid", "cid")
             .join(exact, ["qid", "cid"])
             .agg(F.count(F.lit(1)).alias("n_hits"))
-            .select(F.lit(name).alias("index"), "n_hits")
+            .select(lit.alias(label), "n_hits")
         )
-
-    u = (
-        one("ivf", got["ivf"])
-        .unionByName(one("lsh", got["lsh"]))
-        .unionByName(one("pq", got["pq"]))
-    )
-    return u.select(
-        "index",
+        curve = row if curve is None else curve.unionByName(row)
+    return curve.select(
+        label,
         "n_hits",
         F.lit(possible).cast("bigint").alias("n_possible"),
         (F.col("n_hits").cast("double") / F.lit(float(possible))).alias("recall"),
-    ).orderBy("index")
+    ).orderBy(label)
 
 
 IVF_SWEEP = (1, 2, 3)  # probe budgets on the recall-vs-cost curve
@@ -497,36 +487,16 @@ def s17_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     index builds happen at most once per corpus via the store."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import functions as F
-
     # the sweep's non-shared points (nprobe=1,2; nprobe=3 is s4/s6's
     # deposit) build serially on a cold store — overlap the
     # independent index builds exactly like s6 (guide §2.6; the
     # per-address build locks make concurrent distinct-address
     # builds real). Warm stores: three concurrent deposit reads.
     exact = _exact20(spark, sf_dir).select("qid", "cid")
-    possible = ANN_NQ * K
     with ThreadPoolExecutor(max_workers=len(IVF_SWEEP)) as ex:
-        points = {
-            np_: ex.submit(_ivf_np, spark, sf_dir, np_) for np_ in IVF_SWEEP
-        }
-        points = {np_: f.result() for np_, f in points.items()}
-    curve: DataFrame | None = None
-    for np_ in IVF_SWEEP:
-        row = (
-            points[np_]
-            .select("qid", "cid")
-            .join(exact, ["qid", "cid"])
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-            .select(F.lit(np_).cast("bigint").alias("nprobe"), "n_hits")
-        )
-        curve = row if curve is None else curve.unionByName(row)
-    return curve.select(
-        "nprobe",
-        "n_hits",
-        F.lit(possible).cast("bigint").alias("n_possible"),
-        (F.col("n_hits").cast("double") / F.lit(float(possible))).alias("recall"),
-    ).orderBy("nprobe")
+        futs = [(np_, ex.submit(_ivf_np, spark, sf_dir, np_)) for np_ in IVF_SWEEP]
+        points = [(np_, f.result()) for np_, f in futs]
+    return _recall_curve(exact, "nprobe", points)
 
 
 def s12_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,30 +514,9 @@ def s12_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sim_family: exact20 + the s11 graph), so the harness joins two
     persisted tables instead of re-running the graph build and the
     brute-force pass."""
-    from pyspark.sql import functions as F
-
-    nq = ANN_NQ
     exact = _exact20(spark, sf_dir).select("qid", "cid")
-    g = _graph(spark, sf_dir).where(F.col("qid") < nq).select("qid", "cid")
-    inter = exact.join(g, ["qid", "cid"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("hits")
-    )
-    # nq-bounded aggregate behind stat-less chains: broadcast the
-    # coverage side (see _per_vec_recall)
-    return (
-        exact.select("qid")
-        .distinct()
-        .join(F.broadcast(inter), "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-            F.lit(K).cast("bigint").alias("n_possible"),
-            (F.coalesce(F.col("hits"), F.lit(0)).cast("double") / F.lit(float(K))).alias(
-                "recall"
-            ),
-        )
-        .orderBy("qid")
-    )
+    g = _graph(spark, sf_dir).where(F.col("qid") < ANN_NQ).select("qid", "cid")
+    return _per_vec_recall(exact, g)
 
 
 def s18_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -740,7 +689,7 @@ def s22_hnsw_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _per_vec_recall(exact: DataFrame, res: DataFrame) -> DataFrame:
     """Per-query-vector recall@K of ``res`` against the exact truth —
-    the reporting tail s22 and s24 share (s12's grain: the oracle
+    the reporting tail of s12, s13, s22, s24, s25 and s26 (the oracle
     binds WHICH vectors lose neighbors).
 
     The coverage join's right side is an nq-bounded aggregate (≤ one
@@ -1280,20 +1229,7 @@ def s28_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     qcohort = base.where(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("qid")
     )
-    # nq-bounded aggregate behind stat-less chains: broadcast the
-    # coverage side (see _per_vec_recall)
-    npos = qcohort.join(
-        F.broadcast(
-            exact_f.groupBy("qid").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_possible")
-            )
-        ),
-        "qid",
-        "left",
-    ).select(
-        "qid",
-        F.coalesce("n_possible", F.lit(0)).cast("bigint").alias("n_possible"),
-    )
+    npos = _fann_npos(qcohort, exact_f)
     ph = (
         exact_f.join(pre, ["qid", "cid"])
         .groupBy("qid")
@@ -1633,26 +1569,9 @@ def s23_hnsw_beam_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     with ThreadPoolExecutor(max_workers=len(HNSW_BEAM_SWEEP)) as ex:
-        results = {
-            b: ex.submit(one_beam, b) for b in HNSW_BEAM_SWEEP
-        }
-        results = {b: f.result() for b, f in results.items()}
-    out = None
-    for b in HNSW_BEAM_SWEEP:
-        row = (
-            exact.join(results[b], ["qid", "cid"])
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
-            .select(F.lit(b).cast("bigint").alias("beam"), "n_hits")
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.select(
-        "beam",
-        "n_hits",
-        F.lit(nq * K).cast("bigint").alias("n_possible"),
-        (F.col("n_hits").cast("double") / F.lit(float(nq * K))).alias(
-            "recall"
-        ),
-    ).orderBy("beam")
+        futs = [(b, ex.submit(one_beam, b)) for b in HNSW_BEAM_SWEEP]
+        points = [(b, f.result()) for b, f in futs]
+    return _recall_curve(exact, "beam", points)
 
 
 def s25_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1703,8 +1622,6 @@ def s13_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the truncated corpus is just ``slice(embedding, 1, 16)``), same
     per-vector binding shape as s12; both inputs are sim_family
     deposits (exact20 + the truncated top-k)."""
-    from pyspark.sql import functions as F
-
     nq = ANN_NQ
     exact = _exact20(spark, sf_dir).select("qid", "cid")
 
@@ -1724,26 +1641,7 @@ def s13_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("qid", "cid")
     )
-    inter = exact.join(t, ["qid", "cid"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("hits")
-    )
-    # nq-bounded aggregate behind stat-less chains: broadcast the
-    # coverage side (see _per_vec_recall)
-    return (
-        exact.select("qid")
-        .distinct()
-        .join(F.broadcast(inter), "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-            F.lit(K).cast("bigint").alias("n_possible"),
-            (
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double")
-                / F.lit(float(K))
-            ).alias("recall"),
-        )
-        .orderBy("qid")
-    )
+    return _per_vec_recall(exact, t)
 
 
 SEMDEDUP_THRESHOLD = 0.3
@@ -1857,6 +1755,14 @@ _DOT = (
 )
 
 
+def _plane_dot(vec: str, plane) -> str:
+    """Exact int64 dot of the scaled vector column ``vec`` with one ±1
+    hyperplane, inlined as a literal list — the sign-bit twin of the
+    LSH / split-plane bucketing in operators/similarity.py."""
+    arr = "[" + ",".join(str(int(v)) for v in plane) + "]"
+    return _DOT.format(a=vec, b=f"({arr})")
+
+
 def _oracle_emb_rows() -> int:
     """Embedding count of the gate catalog (footer-only read); the
     adaptive twins bake in the parameters this count implies. A failed
@@ -1889,12 +1795,8 @@ def _d9_oracle() -> str:
     nbits = similarity.adaptive_bits(_oracle_emb_rows())
     nd_planes = similarity.lsh_planes(nb * nbits)
 
-    def dot(j: int) -> str:
-        arr = "[" + ",".join(str(int(v)) for v in nd_planes[j]) + "]"
-        return f"list_reduce(list_transform(range(1, 65), i -> sv[i] * ({arr})[i]), (acc, x) -> acc + x)"
-
     signs = ",\n                 ".join(
-        f"CASE WHEN {dot(j)} >= 0 THEN 1 ELSE 0 END AS s{j}"
+        f"CASE WHEN {_plane_dot('sv', nd_planes[j])} >= 0 THEN 1 ELSE 0 END AS s{j}"
         for j in range(nb * nbits)
     )
     bands = "\n          UNION ALL ".join(
@@ -1940,12 +1842,8 @@ def _s3_oracle() -> str:
     n_planes = similarity.adaptive_planes(_oracle_emb_rows())
     ann_planes = similarity.lsh_planes(n_planes)
 
-    def dot(j: int) -> str:
-        arr = "[" + ",".join(str(int(v)) for v in ann_planes[j]) + "]"
-        return f"list_reduce(list_transform(range(1, 65), i -> sv[i] * ({arr})[i]), (acc, x) -> acc + x)"
-
     bucket = " + ".join(
-        f"(CASE WHEN {dot(j)} >= 0 THEN {1 << j} ELSE 0 END)"
+        f"(CASE WHEN {_plane_dot('sv', ann_planes[j])} >= 0 THEN {1 << j} ELSE 0 END)"
         for j in range(n_planes)
     )
     probe_list = ", ".join(
@@ -2792,12 +2690,8 @@ def _s11_oracle(where: str = "", n_members: int | None = None) -> str:
     )
     ann_planes = similarity.lsh_planes(n_planes)
 
-    def dot(j: int) -> str:
-        arr = "[" + ",".join(str(int(v)) for v in ann_planes[j]) + "]"
-        return f"list_reduce(list_transform(range(1, 65), i -> sv[i] * ({arr})[i]), (acc, x) -> acc + x)"
-
     bucket = " + ".join(
-        f"(CASE WHEN {dot(j)} >= 0 THEN {1 << j} ELSE 0 END)"
+        f"(CASE WHEN {_plane_dot('sv', ann_planes[j])} >= 0 THEN {1 << j} ELSE 0 END)"
         for j in range(n_planes)
     )
     probe_list = ", ".join(
@@ -3304,15 +3198,9 @@ def _s7_oracle(threshold: float = SEMDEDUP_THRESHOLD, max_cell: int = 256) -> st
         f"(CASE WHEN m > {1 << i} THEN 1 ELSE 0 END)" for i in range(msb)
     )
 
-    def sdot(j: int) -> str:
-        arr = "[" + ",".join(str(int(v)) for v in sp[j]) + "]"
-        return (
-            "list_reduce(list_transform(range(1, 65),"
-            f" i -> g.sv[i] * ({arr})[i]), (acc, x) -> acc + x)"
-        )
-
     subcell = " + ".join(
-        f"(CASE WHEN {i} < e.eb AND {sdot(i)} >= 0 THEN {1 << i} ELSE 0 END)"
+        f"(CASE WHEN {i} < e.eb AND {_plane_dot('g.sv', sp[i])} >= 0"
+        f" THEN {1 << i} ELSE 0 END)"
         for i in range(msb)
     )
     return f"""

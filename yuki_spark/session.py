@@ -14,7 +14,6 @@ io.sinks.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -73,7 +72,8 @@ def cluster_profile(
       executor-memory-sized.
 
     Pure function → dict, so it works on a builder (`.config(conf=)`)
-    or a live session (:func:`session_profile`); every key here is
+    or a live session (``session_profile`` in
+    tests/test_scale_plans.py); every key here is
     runtime-settable by design — static confs (executor memory/count)
     belong to the submit layer, not the engine."""
     total_cores = executors * cores_per_executor
@@ -91,31 +91,3 @@ def cluster_profile(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
     }
-
-
-@contextmanager
-def session_profile(spark: SparkSession, conf: dict[str, str]):
-    """Apply a conf profile to a live session for the duration of a
-    block, restoring every key afterwards (unset keys are restored by
-    unsetting — same discipline as the backends' per-task conf)."""
-    prev: dict[str, str | None] = {}
-    try:
-        # application runs INSIDE the try: if a mid-loop set raises
-        # (e.g. a static conf), the keys applied so far are restored
-        # by the finally instead of leaking onto the live session
-        for k, v in conf.items():
-            try:
-                prev[k] = spark.conf.get(k)
-            except Exception:  # noqa: BLE001 — key unset in this session
-                prev[k] = None
-            spark.conf.set(k, v)
-        yield spark
-    finally:
-        for k, old in prev.items():
-            try:
-                if old is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, old)
-            except Exception:  # noqa: BLE001 — static conf: restore the
-                pass  # rest; never mask the body's exception

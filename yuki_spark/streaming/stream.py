@@ -408,9 +408,11 @@ def _commit(spark: SparkSession, snapshots, side=None) -> None:
     atomic, so nothing is ever written into a live directory; and
     because no live file is touched in this phase, every frame may
     keep reading the live snapshots through its lineage — no
-    checkpoint is needed to protect an overwrite. A crash here leaves
-    every live snapshot intact; the stale stage is overwritten by the
-    next commit of that path.
+    checkpoint is needed to protect an overwrite. A failure here leaves
+    every live snapshot intact and deletes the batch's ``.staged``
+    copies before it re-raises; only a process killed mid-phase
+    leaves a stale stage, which the next commit of that path
+    overwrites.
 
     Phase 2 swaps the staged copies in, in the declared order, each by
     two renames through ``.old`` (:func:`_swap`). The one broken
@@ -430,12 +432,18 @@ def _commit(spark: SparkSession, snapshots, side=None) -> None:
     without atomic rename this is where a lakehouse table's
     transaction log takes over."""
     snapshots = list(snapshots)
-    staged = [_stage(df, path) for path, df in snapshots]
-    if side is not None:
-        extra = list(side(*staged))
-        for path, df in extra:
-            _stage(df, path)
-        snapshots += extra
+    try:
+        staged = [_stage(df, path) for path, df in snapshots]
+        if side is not None:
+            extra = list(side(*staged))
+            snapshots += extra
+            for path, df in extra:
+                _stage(df, path)
+    except BaseException:
+        for path, _ in snapshots:
+            fs, st = _fs_path(spark, path + ".staged")
+            fs.delete(st, True)  # false, not an error, when never written
+        raise
     for path, _ in snapshots:
         _swap(spark, path)
 
