@@ -16,7 +16,7 @@ import os
 import sys
 import time
 
-from yuki_spark.session import get_spark
+from yuki_spark.session import codegen_compiles, get_spark
 
 # Headline set: EVERY queries() key (the r4 verdict flagged
 # the 47 untimed queries as regression-invisible). Ordering interleaves
@@ -240,11 +240,15 @@ def _main_body(
     cascade_limit = int(os.environ.get("SPARK_GRAFT_BENCH_CASCADE_LIMIT", "3"))
     consecutive_timeouts = 0
     aborted_after: str | None = None
+    # generated classes each run compiled (codegen cache misses): the
+    # cold-phase run, then one entry per timed pass
+    compiles: dict[str, dict] = {}
 
-    def guarded_key(name: str) -> float | None:
+    def guarded_key(name: str, cold: bool = False) -> float | None:
         """One compile+run of ``name`` under the watchdog; records the
         sentinel and cancels the orphaned jobs on timeout."""
         nonlocal consecutive_timeouts, aborted_after
+        c0 = codegen_compiles(spark)
         dt = _guarded(lambda: _run(qs[name](spark, sf_dir)), key_timeout)
         if dt is None:
             if name not in timed_out:
@@ -255,6 +259,12 @@ def _main_body(
                 aborted_after = name
         else:
             consecutive_timeouts = 0
+            row = compiles.setdefault(name, {"cold": None, "steady": []})
+            n = codegen_compiles(spark) - c0
+            if cold:
+                row["cold"] = n
+            else:
+                row["steady"].append(n)
         return dt
 
     cold_build_s: dict[str, float] = {}
@@ -262,7 +272,7 @@ def _main_body(
         if aborted_after is not None:
             break  # cascade guard tripped: ship the partial artifact
         if name in qs:
-            dt = guarded_key(name)
+            dt = guarded_key(name, cold=True)
             if dt is not None:
                 cold_build_s[name] = round(dt, 3)
 
@@ -327,6 +337,10 @@ def _main_body(
         "queries": per_query,
         "medians": medians,
         "cold_build_s": cold_build_s,
+        # file only (the stdout line has no room): per key, the classes
+        # its cold-phase run (null: no cold run) and each timed pass
+        # compiled — a steady pass above 0 is recompiling evicted code
+        "codegen_compiles": compiles,
         # watchdog sentinels: keys whose run exceeded the per-key
         # timeout (the py4j-hang guard) — excluded from queries/value
         # so one hung key can't pollute the totals (samples taken

@@ -6,7 +6,8 @@ Runs ONE variant in a fresh process (cold JVM — the driver's own
 measurement condition), replicating bench.py's methodology exactly:
 fresh artifact-store roots (cold builds paid in-process), the q1 +
 pandas-UDF warm-ups, then the key's first (cold) run followed by
-min-of-3 steady-state noop runs. Prints one JSON line.
+min-of-3 steady-state noop runs. Prints one JSON line, with the
+generated classes each of those runs compiled.
 
 ``off`` disables catalog._fan_out process-wide (identity), so the
 same key body runs on the direct scan — the r14-verdict item-3
@@ -42,16 +43,18 @@ def main() -> None:
     if variant == "off":
         cat._fan_out = lambda spark, df, path, name: df  # type: ignore[assignment]
 
-    from yuki_spark.session import get_spark
+    from yuki_spark.session import codegen_compiles, get_spark
 
     qs = queries()
     spark = get_spark(f"ab_fanout_{key}_{variant}")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(fn) -> float:
+    def run(fn) -> tuple[float, int]:
+        """Seconds, and generated classes compiled, of one noop run."""
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - t0
+        return time.perf_counter() - t0, codegen_compiles(spark) - c0
 
     run(qs["q1_pricing_summary"])  # JVM/codegen warm-up (bench parity)
     from pyspark.sql.functions import pandas_udf
@@ -60,8 +63,8 @@ def main() -> None:
         pandas_udf(lambda s: s, "long")("id")
     ).write.mode("overwrite").format("noop").save()
 
-    cold = run(qs[key])
-    steady = [run(qs[key]) for _ in range(3)]
+    cold, cold_compiles = run(qs[key])
+    steady, steady_compiles = zip(*(run(qs[key]) for _ in range(3)))
     print(
         json.dumps(
             {
@@ -70,6 +73,8 @@ def main() -> None:
                 "cold_s": round(cold, 3),
                 "steady_min_s": round(min(steady), 3),
                 "steady_all_s": [round(t, 3) for t in steady],
+                "cold_compiles": cold_compiles,
+                "steady_compiles": list(steady_compiles),
             }
         )
     )

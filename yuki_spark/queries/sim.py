@@ -1835,42 +1835,9 @@ def _d9_oracle() -> str:
 
 
 def _s3_oracle() -> str:
-    """Twin of lsh_ann: identical ±1-plane sign buckets (exact int64
-    dots, plane count from the same adaptive_planes(count) as the
-    Spark side), identical Hamming-1 multi-probe set, identical
-    int-cosine scoring within probed buckets."""
-    n_planes = similarity.adaptive_planes(_oracle_emb_rows())
-    ann_planes = similarity.lsh_planes(n_planes)
-
-    bucket = " + ".join(
-        f"(CASE WHEN {_plane_dot('sv', ann_planes[j])} >= 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(n_planes)
-    )
-    probe_list = ", ".join(
-        ["bucket"] + [f"xor(bucket, {1 << i})" for i in range(n_planes)]
-    )
-    return f"""
-        WITH base AS (
-          SELECT vec_id, {_SCALED} AS sv FROM embeddings),
-        b AS (
-          SELECT vec_id, sv, {_DOT.format(a='sv', b='sv')} AS nrm,
-                 {bucket} AS bucket
-          FROM base),
-        qp AS (
-          SELECT vec_id, sv, nrm, unnest([{probe_list}]) AS bucket
-          FROM b WHERE vec_id < 20),
-        scored AS (
-          SELECT q.vec_id AS qid, c.vec_id AS cid,
-                 round(CAST({_DOT.format(a='q.sv', b='c.sv')} AS DOUBLE)
-                   / (sqrt(CAST(q.nrm AS DOUBLE)) * sqrt(CAST(c.nrm AS DOUBLE))), 9) AS cosine
-          FROM qp q JOIN b c
-            ON q.bucket = c.bucket AND q.vec_id <> c.vec_id)
-        SELECT qid, rk, cid, cosine FROM (
-          SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, cid) AS BIGINT) AS rk
-          FROM scored)
-        WHERE rk <= {K}
-        ORDER BY qid, rk
-    """
+    """Twin of lsh_ann: :func:`_s11_oracle` probed by the 20-vector
+    query cohort only."""
+    return _s11_oracle(nq=20)
 
 
 def _s1_sql_dims(nq: int, dims: int) -> str:
@@ -2679,12 +2646,17 @@ def _s10_oracle() -> str:
     """
 
 
-def _s11_oracle(where: str = "", n_members: int | None = None) -> str:
-    """Twin of knn_graph: _s3_oracle's bucket/probe/scoring SQL with
-    the query filter removed (ALL vectors probe) — same adaptive plane
-    count, same exact-int cosine, same (cosine desc, cid) top-K.
-    ``where``/``n_members`` restrict it to a member subset (s22's
-    level-1 graph: the plane count adapts to the LEVEL size)."""
+def _s11_oracle(
+    where: str = "", n_members: int | None = None, nq: int | None = None
+) -> str:
+    """Twin of knn_graph: identical ±1-plane sign buckets (exact int64
+    dots, plane count from the same adaptive_planes(count) as the
+    Spark side), identical Hamming-1 multi-probe set, identical
+    int-cosine (cosine desc, cid) top-K within probed buckets; ALL
+    vectors probe. ``where``/``n_members`` restrict it to a member
+    subset (s22's level-1 graph: the plane count adapts to the LEVEL
+    size); ``nq`` instead keeps every member and probes with vectors
+    ``0..nq-1`` only (lsh_ann's query cohort)."""
     n_planes = similarity.adaptive_planes(
         n_members if n_members is not None else _oracle_emb_rows()
     )
@@ -2697,16 +2669,19 @@ def _s11_oracle(where: str = "", n_members: int | None = None) -> str:
     probe_list = ", ".join(
         ["bucket"] + [f"xor(bucket, {1 << i})" for i in range(n_planes)]
     )
+    members, probes = f"embeddings {where}", "b"
+    if nq is not None:
+        members, probes = "embeddings", f"b WHERE vec_id < {nq}"
     return f"""
         WITH base AS (
-          SELECT vec_id, {_SCALED} AS sv FROM embeddings {where}),
+          SELECT vec_id, {_SCALED} AS sv FROM {members}),
         b AS (
           SELECT vec_id, sv, {_DOT.format(a='sv', b='sv')} AS nrm,
                  {bucket} AS bucket
           FROM base),
         qp AS (
           SELECT vec_id, sv, nrm, unnest([{probe_list}]) AS bucket
-          FROM b),
+          FROM {probes}),
         scored AS (
           SELECT q.vec_id AS qid, c.vec_id AS cid,
                  round(CAST({_DOT.format(a='q.sv', b='c.sv')} AS DOUBLE)

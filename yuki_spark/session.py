@@ -50,8 +50,24 @@ def get_spark(app_name: str = "yuki_spark", shuffle_partitions: int | None = Non
         # off so every date column is a UTC instant from the start
         # (catalog.load repeats this for caller-provided sessions).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        # Generated-class cache (static: read once per JVM). Spark keeps
+        # 100 classes by default, but one pass over all 164 queries()
+        # keys at sf0.001 compiles about 3,120 distinct classes and one
+        # timed perfbench corpus pass about 300, so every repeated pass
+        # recompiled (and re-interpreted until the JIT caught up) code
+        # it had compiled before. 4096 holds the whole working set; it
+        # costs about 24 MB more metaspace after an all-keys pass.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (cache misses of
+    the codegen cache); the difference across a run is what it
+    recompiled."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def cluster_profile(

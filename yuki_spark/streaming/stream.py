@@ -490,7 +490,8 @@ def _run_dedup_ingest(
       checkpointed by the callback.
     - ``cross_dups(batch, index_rows, extra, index, primary)`` ->
       DataFrame[key] of batch keys duplicating ingested content
-      (self-matches of a replayed batch already excluded).
+      (self-matches of a replayed batch already excluded); eagerly
+      checkpointed here, before any snapshot is staged.
     - ``rebuild_index(primary)`` — the index is DERIVED data: a crash
       between the two swaps is healed by re-deriving it.
     - ``maintain(spark, novel, merged_primary)`` (optional) ->
@@ -520,7 +521,11 @@ def _run_dedup_ingest(
         if primary is not None:
             if index is None:
                 index = rebuild_index(primary)
-            dup = cross_dups(batch, index_rows, extra, index, primary)
+            # computed once: the primary and index stages would each
+            # re-run the whole cross-batch verification otherwise
+            dup = cross_dups(batch, index_rows, extra, index, primary).localCheckpoint(
+                eager=True
+            )
             novel = batch.join(dup, key, "left_anti")
             merged_primary = merge_upsert(primary, novel, [key])
             merged_index = merge_upsert(
