@@ -16,7 +16,7 @@ import os
 import sys
 import time
 
-from yuki_spark.session import codegen_compiles, get_spark
+from yuki_spark.session import codegen_compiles, get_spark, launched_cds
 
 # Headline set: EVERY queries() key (the r4 verdict flagged
 # the 47 untimed queries as regression-invisible). Ordering interleaves
@@ -171,7 +171,11 @@ def _main_body(
     names = [n for n in HEADLINE if n in qs]
     names += [n for n in qs if n not in set(HEADLINE)]  # never drop a key
 
+    t0 = time.perf_counter()
     spark = get_spark("yuki_spark_bench")
+    spark.range(32).collect()  # the first job pays the JVM's class loading
+    cds = launched_cds(spark)
+    launch = {"s": round(time.perf_counter() - t0, 3), "archive": cds and cds[0]}
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up timeouts must be VISIBLE (r10 advice): a silently hung
@@ -341,6 +345,11 @@ def _main_body(
         # its cold-phase run (null: no cold run) and each timed pass
         # compiled — a steady pass above 0 is recompiling evicted code
         "codegen_compiles": compiles,
+        # file only: seconds from get_spark to the end of the first job
+        # (a new driver JVM), and the class-data-sharing option it was
+        # launched with (SharedArchiveFile: mapped the archive;
+        # ArchiveClassesAtExit: recorded it; null: launched without)
+        "launch": launch,
         # watchdog sentinels: keys whose run exceeded the per-key
         # timeout (the py4j-hang guard) — excluded from queries/value
         # so one hung key can't pollute the totals (samples taken

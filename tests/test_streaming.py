@@ -1107,6 +1107,31 @@ def test_snapshot_atomic_overwrite_and_heal(spark, tmp_path):
     assert st._read_snapshot_or_none(spark, snap) is None
 
 
+def test_snapshot_read_uses_the_staged_schema_without_a_job(spark, tmp_path):
+    """_stage records the frame's schema beside the data, so reading
+    the committed snapshot fires no inference job and yields what
+    inference would; a snapshot staged without the file still reads
+    (by inference)."""
+    snap = str(tmp_path / "snap")
+    frame = spark.range(6).selectExpr(
+        "id AS k", "CAST(id AS STRING) AS s", "array(id, id + 1) AS a",
+        "named_struct('x', id * 0.5) AS st", "TIMESTAMP '2024-01-01 00:00:00' AS ts",
+    )
+    st._commit(spark, [(snap, frame)])
+    assert os.path.exists(os.path.join(snap, st._SCHEMA_FILE))
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    before = sc.statusStore().jobsList(None).size()
+    read = st._read_snapshot_or_none(spark, snap)
+    sc.listenerBus().waitUntilEmpty()
+    assert sc.statusStore().jobsList(None).size() == before
+    inferred = spark.read.parquet(snap)
+    assert read.schema == inferred.schema
+    assert sorted(read.collect()) == sorted(inferred.collect()) == sorted(frame.collect())
+    os.remove(os.path.join(snap, st._SCHEMA_FILE))
+    assert st._read_snapshot_or_none(spark, snap).schema == inferred.schema
+
+
 def _dir_bytes(path: str) -> dict[str, bytes]:
     """Every file under a snapshot directory (data, markers, checksums)."""
     out = {}

@@ -264,6 +264,19 @@ def _minhash_sig(tok_hashes: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+# The band structs of band_index as one SQL expression: built column
+# by column they cost ~2,400 py4j round trips per call.
+_ROWS_PER_BAND = N_PERM // N_BANDS
+_BANDS_SQL = "array({})".format(
+    ", ".join(
+        f"named_struct('band', {i}, 'bkey', xxhash64("
+        + ", ".join(f"sig[{i * _ROWS_PER_BAND + j}]" for j in range(_ROWS_PER_BAND))
+        + "))"
+        for i in range(N_BANDS)
+    )
+)
+
+
 def band_index(ts: DataFrame) -> DataFrame:
     """MinHash-LSH band keys of a (token-set) corpus: one row per
     (doc_id, band, bkey). This IS the near-dup index a continuously
@@ -275,20 +288,8 @@ def band_index(ts: DataFrame) -> DataFrame:
     sig = ts.withColumn(
         "tok_hashes", F.transform("toks", lambda t: F.xxhash64(t))
     ).withColumn("sig", _minhash_sig("tok_hashes"))
-    rows_per_band = N_PERM // N_BANDS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.xxhash64(
-                    *[F.col("sig")[i * rows_per_band + j] for j in range(rows_per_band)]
-                ).alias("bkey"),
-            )
-            for i in range(N_BANDS)
-        ]
-    )
     return (
-        sig.select("doc_id", F.explode(bands).alias("bk"))
+        sig.select("doc_id", F.explode(F.expr(_BANDS_SQL)).alias("bk"))
         .select(
             "doc_id", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
         )

@@ -38,7 +38,6 @@ import importlib
 import inspect
 import json
 import os
-import stat as stat_mod
 import tempfile
 import threading
 from collections.abc import Callable
@@ -48,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import part_identity, table_path
 from ..pipeline.impressions import ImpressionStore, impression_id
+from ..session import private_dir
 
 # PER-ADDRESS build locks (r15: the former single global RLock
 # serialized every in-process build, so a caller overlapping four
@@ -83,23 +83,7 @@ def default_store_root(env_var: str, name: str) -> str | None:
     env = os.environ.get(env_var)
     if env:
         return env
-    root = os.path.join(tempfile.gettempdir(), f"{name}-{os.getuid()}")
-    try:
-        os.makedirs(root, mode=0o700, exist_ok=True)
-        # lstat + S_ISDIR: a pre-planted SYMLINK at the predictable
-        # path would pass a follow-symlink stat (the target can be a
-        # victim-owned 0700 dir) — the link itself must be a real
-        # directory we own, not a redirect
-        st = os.lstat(root)
-        if (
-            not stat_mod.S_ISDIR(st.st_mode)
-            or st.st_uid != os.getuid()
-            or (st.st_mode & 0o077)
-        ):
-            return None
-    except OSError:
-        return None
-    return root
+    return private_dir(os.path.join(tempfile.gettempdir(), f"{name}-{os.getuid()}"))
 
 
 def code_fingerprint(*modules) -> str:

@@ -13,6 +13,7 @@ against the batch twin on the same rows.
 """
 from __future__ import annotations
 
+import json
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -53,6 +54,11 @@ DOCUMENT_SCHEMA = StructType(
 )
 
 SESSION_GAP_SEC = 30 * 60
+
+# Written into every staged snapshot: the schema it was written with,
+# so a read needs no inference job. Spark's file index skips names
+# starting with "_".
+_SCHEMA_FILE = "_schema.json"
 
 
 def read_event_stream(
@@ -348,7 +354,9 @@ def _read_snapshot_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     exists WITHOUT its ``_SUCCESS`` commit marker is a partial write
     from a crashed overwrite — fail loud rather than merge against a
     truncated snapshot and persist the loss. Interrupted
-    :func:`_swap`s are healed first (see _heal_snapshot)."""
+    :func:`_swap`s are healed first (see _heal_snapshot). The schema
+    comes from the snapshot's :data:`_SCHEMA_FILE`; one staged
+    without it is read by inference (one job)."""
     _heal_snapshot(spark, path)
     fs, hpath = _fs_path(spark, path)
     if not fs.exists(hpath):
@@ -361,19 +369,33 @@ def _read_snapshot_or_none(spark: SparkSession, path: str) -> DataFrame | None:
             "possibly-truncated snapshot (restore it or delete the "
             "directory to restart from scratch)"
         )
-    return spark.read.parquet(path)
+    _, sfile = _fs_path(spark, f"{path}/{_SCHEMA_FILE}")
+    if not fs.exists(sfile):
+        return spark.read.parquet(path)
+    stream = fs.open(sfile)
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return spark.read.schema(StructType.fromJson(json.loads(text))).parquet(path)
 
 
 def _stage(df: DataFrame, path: str) -> DataFrame:
     """Write ``df`` to ``path``'s ``.staged`` sibling, verify its
-    ``_SUCCESS`` marker, and read the staged copy back with the schema
-    it was written from (no inference job)."""
+    ``_SUCCESS`` marker, record its schema in :data:`_SCHEMA_FILE`, and
+    read the staged copy back with that schema (no inference job)."""
     spark = df.sparkSession
     staged = path + ".staged"
     df.write.mode("overwrite").parquet(staged)
     fs, marker = _fs_path(spark, staged + "/_SUCCESS")
     if not fs.exists(marker):
         raise RuntimeError(f"staged rewrite {staged!r} missing _SUCCESS marker")
+    _, sfile = _fs_path(spark, f"{staged}/{_SCHEMA_FILE}")
+    out = fs.create(sfile, True)
+    try:
+        out.write(bytearray(df.schema.json().encode()))
+    finally:
+        out.close()
     return spark.read.schema(df.schema).parquet(staged)
 
 
@@ -1637,7 +1659,6 @@ def _histogram_build(batch_df: DataFrame) -> bytes:
     accumulated state is directly comparable to the driver-verified
     batch PSI (e22). The per-batch aggregate is type×12 rows — a
     bounded collect at any input scale."""
-    import json as _json
 
     binned = (
         batch_df.select(
@@ -1656,18 +1677,17 @@ def _histogram_build(batch_df: DataFrame) -> bytes:
     cells = {
         f"{r['event_type']}\x1f{r['bucket']}": r["c"] for r in binned.collect()
     }
-    return _json.dumps(cells, sort_keys=True).encode()
+    return json.dumps(cells, sort_keys=True).encode()
 
 
 def _histogram_merge(a: bytes, b: bytes) -> bytes:
     """Cell-wise addition — histograms are linear like CM sketches,
     so the accumulated state equals the one-shot batch histogram."""
-    import json as _json
 
-    out = _json.loads(a.decode())
-    for k, v in _json.loads(b.decode()).items():
+    out = json.loads(a.decode())
+    for k, v in json.loads(b.decode()).items():
         out[k] = out.get(k, 0) + v
-    return _json.dumps(out, sort_keys=True).encode()
+    return json.dumps(out, sort_keys=True).encode()
 
 
 def run_histogram_accumulator(sdf: DataFrame, state_path: str, checkpoint: str):
@@ -1685,13 +1705,12 @@ def run_histogram_accumulator(sdf: DataFrame, state_path: str, checkpoint: str):
 
 def histogram_state(state_path: str) -> dict[str, dict[int, int]]:
     """Accumulated histogram as {event_type: {bucket: count}}."""
-    import json as _json
 
     _, raw = read_sketch_state(state_path)
     out: dict[str, dict[int, int]] = {}
     if not raw:
         return out
-    for k, v in _json.loads(raw.decode()).items():
+    for k, v in json.loads(raw.decode()).items():
         etype, bucket = k.rsplit("\x1f", 1)
         out.setdefault(etype, {})[int(bucket)] = v
     return out
